@@ -47,6 +47,12 @@ class LabelMeta:
     # Spark analog of PostgreSQL CLUSTER's heap rewrite)
     clustered_on: str | None = None   # index name, for catalog display
     cluster_keys: list[str] = field(default_factory=list)
+    # the ag_label_seq analog (graphcmds.c:79-87): the next locid a
+    # CREATE hands out. None until a write seeds it from one max-scan
+    # of the label's frame; it then only moves forward, so a deleted
+    # element's graphid is never handed out again. Carried through
+    # commits and snapshots; Graph.set_label_df resets it.
+    next_locid: int | None = None
 
     def to_dict(self) -> dict:
         return {
@@ -58,6 +64,7 @@ class LabelMeta:
             "owner": self.owner,
             "clustered_on": self.clustered_on,
             "cluster_keys": list(self.cluster_keys),
+            "next_locid": self.next_locid,
         }
 
 
@@ -229,6 +236,7 @@ class GraphCatalog:
                 parents=list(m.get("parents", [])), props=dict(m.get("props", {})),
                 owner=m.get("owner"), clustered_on=m.get("clustered_on"),
                 cluster_keys=list(m.get("cluster_keys", [])),
+                next_locid=m.get("next_locid"),
             )
         return cat
 

@@ -53,6 +53,12 @@ import itertools as _itertools
 _SUBQ_IDS = _itertools.count(1)
 
 
+def one_row(spark: SparkSession) -> DataFrame:
+    """A one-row, one-partition local relation. Unlike createDataFrame it
+    plans no Python RDD, so materializing it starts no Python worker."""
+    return spark.sql("SELECT 1")
+
+
 def _sort_col(name: str, asc: bool, nulls: "str | None") -> Column:
     """ORDER BY direction + null placement (reference:
     gram.y:18957-18967 cypher_sort_item opt_nulls_order). An
@@ -132,7 +138,7 @@ class CypherEngine:
     def cypher(self, text: str, params: dict | None = None) -> DataFrame:
         from agensgraph_spark.cypher.ddl import execute_ddl
         if execute_ddl(self.store, text):
-            return self.spark.createDataFrame([("ok",)], "status string")
+            return one_row(self.spark).select(F.lit("ok").alias("status"))
         uq = parse_cypher(text)
         leaves = uq.leaves if isinstance(uq, A.SetOp) else [uq]
         has_write = any(isinstance(c, WRITE_CLAUSES)
@@ -180,12 +186,14 @@ class CypherEngine:
         returns_rows = part.clauses and isinstance(part.clauses[-1], A.Projection)
         df = qc.compile(part)
         if qc.wctx is not None:
-            # cap partitions BEFORE materializing: a create pipeline
-            # carries the scanned frame's partitioning, so the committed
-            # union would otherwise DOUBLE its partition count on every
-            # statement (128 → 256 → 512 ... measured exponential
-            # per-statement slowdown). coalesce is narrow; a no-op when
-            # already at or below the target.
+            # the one materialization of each touched label: the write
+            # clauses leave the new frames lazy. Cap partitions BEFORE
+            # materializing: a create pipeline carries the scanned
+            # frame's partitioning, so the committed union would
+            # otherwise DOUBLE its partition count on every statement
+            # (128 → 256 → 512 ... measured exponential per-statement
+            # slowdown). coalesce is narrow; a no-op when already at or
+            # below the target.
             spread = self.spark.sparkContext.defaultParallelism
             for lbl in qc.wctx.touched:
                 qc.wctx.graph.frames[lbl] = qc.wctx.graph.frames[lbl] \
@@ -194,27 +202,26 @@ class CypherEngine:
             # check constraint errors abort the inserting statement,
             # cypher_dml.sql:1036-1040): the working graph is simply
             # discarded on violation — immutable snapshots make the
-            # rollback free. Only constraints on touched labels run, so
-            # unconstrained writes pay nothing.
+            # rollback free. Only constraints on labels with inserted or
+            # updated rows run: unconstrained writes and deletes pay
+            # nothing.
             self._enforce_constraints(qc.wctx)
             self.graph = qc.wctx.graph
             self.last_write_stats = qc.wctx.stats.as_dict()
         if returns_rows:
             return df
-        stats = self.last_write_stats
-        return self.spark.createDataFrame(
-            [tuple(stats.values())],
-            schema=", ".join(f"{k} long" for k in stats))
+        return one_row(self.spark).select(
+            *[F.lit(v).cast("long").alias(k) for k, v in self.last_write_stats.items()])
 
     def _enforce_constraints(self, wctx) -> None:
-        """Raise on unique/check violations over the TOUCHED labels of
-        a not-yet-committed working graph (write-time enforcement; the
-        whole-graph batch sweep stays available as
-        ddl.validate_constraints)."""
+        """Raise on unique/check violations over the labels a
+        not-yet-committed working graph inserted or updated rows in
+        (write-time enforcement; the whole-graph batch sweep stays
+        available as ddl.validate_constraints)."""
         from agensgraph_spark.cypher.ddl import validate_constraints
         name = self.store.graph_path
         cons = [c for c in self.store.constraints.get(name, [])
-                if c.label in wctx.touched]
+                if c.label in wctx.written]
         if not cons:
             return
         saved = self.store.graphs.get(name)
@@ -412,7 +419,7 @@ class QueryCompiler(WriteMixin):
 
     def _ensure_df(self) -> DataFrame:
         if self.df is None:
-            self.df = self.engine.spark.range(1).select(F.lit(1).alias("__one"))
+            self.df = one_row(self.engine.spark).select(F.lit(1).alias("__one"))
         return self.df
 
     def _force(self, vars_needed) -> None:

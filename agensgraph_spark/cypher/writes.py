@@ -12,20 +12,41 @@ Spark-native shape: every write clause computes a *change-set
 DataFrame* and swaps new immutable label frames into a working copy of
 the Graph; downstream clauses in the same statement scan the working
 copy, so the reference's eager semantics hold by construction — no
-tuplestore, no visibility machinery. On commit the changed frames are
-materialized (lineage cut) and become the engine's new snapshot; at
-scale the same change-sets append/overwrite Parquet label snapshots
-(`Graph.write_snapshot`) instead of memory.
+tuplestore, no visibility machinery. At scale the same change-sets
+append/overwrite Parquet label snapshots (`Graph.write_snapshot`)
+instead of memory.
 
-Id allocation: the reference draws 48-bit locids from a per-graph
-sequence (src/backend/commands/graphcmds.c:79-87 ag_label_seq). Here a
-batch of created elements takes ``next_locid + dense_uid`` where the
-dense uid is derived from monotonically_increasing_id() plus one tiny
-per-partition row-count aggregate (partition-offset scheme) — still
-embarrassingly parallel and coordination-free, but each statement
-advances the locid by exactly its row count, so repeated CREATEs never
-overflow the 48-bit locid space into labid bits. The input pipeline is
-checkpointed before minting so ids are stable against recomputation.
+A statement's eager work follows the rows it changes, not the size or
+number of the labels it touches:
+
+- Change-sets are materialized; label frames are not. A clause
+  materializes its change-set once (the DELETE victims, the SET update
+  rows, the CREATE input when it has more than the one seed row) and
+  counts it in the same job. The new label frames stay lazy
+  (anti-joins, unions, update joins) until the commit materializes
+  each touched label exactly once (``CypherEngine._execute_write``).
+- One broadcast rule (`changeset`): every join of a change-set against
+  a label frame broadcasts the change-set side when its driver-known
+  row count is below ``BROADCAST_CHANGESET_ROWS``. Checkpointed frames
+  give the planner no reliable size, and left alone it broadcasts the
+  whole label to probe a handful of ids.
+- Repeated deletes in one statement (DELETE a ... DELETE a) count their
+  survivors against the ids this statement already removed, never by
+  re-scanning the rewritten frames.
+
+Id allocation: the reference draws 48-bit locids from a per-label
+sequence (src/backend/commands/graphcmds.c:79-87 ag_label_seq). Here the
+sequence is ``LabelMeta.next_locid`` in the catalog: seeded by at most
+one max-scan per label (all unseeded labels of a clause in one job),
+then advanced by each statement's row count and carried through
+commits, so one statement's locids are consecutive and a deleted
+element's graphid is never handed out again. A batch of created
+elements takes ``next_locid + dense_uid``, where the dense uid is
+derived from monotonically_increasing_id() plus one tiny per-partition
+row-count aggregate (partition-offset scheme) — embarrassingly parallel
+and coordination-free. The input pipeline is checkpointed before
+minting so ids are stable against recomputation; a CREATE with no
+reading clause has one static row and mints without any job.
 """
 
 from __future__ import annotations
@@ -42,6 +63,26 @@ from agensgraph_spark.graph import Graph, prop_col_name, prop_display_name
 from agensgraph_spark.graphid import LOCID_BITS, LOCID_MASK, graphid_col
 
 DEFAULT_VLABEL = "ag_vertex"
+
+# change-sets below this many rows broadcast into their joins against
+# label frames (see `changeset`)
+BROADCAST_CHANGESET_ROWS = 1_000_000
+
+
+def changeset(df: DataFrame, n_rows: int) -> DataFrame:
+    """The join side of a change-set (victim ids, update rows) against
+    a label frame: broadcast when its driver-known row count is small."""
+    return F.broadcast(df) if n_rows < BROADCAST_CHANGESET_ROWS else df
+
+
+def materialize(df: DataFrame) -> tuple[DataFrame, int]:
+    """Checkpoint a change-set and count its rows in one job (beyond the
+    plan's own shuffle stages): the count runs over the lazily
+    checkpointed RDD, so computing it stores the checkpoint too. An
+    eager checkpoint followed by count() takes three jobs: the
+    checkpoint, then the count as a two-stage aggregate."""
+    out = df.localCheckpoint(eager=False)
+    return out, out._jdf.rdd().count()
 
 
 @dataclass
@@ -62,34 +103,53 @@ class WriteStats:
 @dataclass
 class WriteContext:
     """Per-statement working state: a private Graph copy whose frames
-    mutate clause-by-clause, plus stats and the set of touched labels."""
+    mutate clause-by-clause, plus stats and the labels touched."""
     graph: Graph
     stats: WriteStats = field(default_factory=WriteStats)
+    # labels whose frames this statement replaced (materialized at commit)
     touched: set[str] = field(default_factory=set)
-    # kinds ("v"/"e") some DELETE clause of this statement has already
-    # removed — gates the exact-vs-fast path of _victim_label_counts
-    deleted_kinds: set[str] = field(default_factory=set)
-    _next_locid: dict[str, int] = field(default_factory=dict)
+    # labels with inserted or updated rows (constraint scope: a delete
+    # cannot break a unique or check constraint)
+    written: set[str] = field(default_factory=set)
+    # kind ("v"/"e") -> (ids this statement already deleted, a bound on
+    # their row count)
+    deleted: dict[str, tuple[DataFrame, int]] = field(default_factory=dict)
 
     @classmethod
     def begin(cls, graph: Graph) -> "WriteContext":
         return cls(graph=Graph(_copy.deepcopy(graph.catalog), dict(graph.frames)))
 
-    # ---- id allocation ----
+    # ---- id allocation (the ag_label_seq analog) ----
 
-    def next_locid(self, label: str) -> int:
-        nxt = self._next_locid.get(label)
-        if nxt is None:
-            df = self.graph.frames.get(label)
-            if df is None or not df.columns:
-                nxt = 1
-            else:
-                row = df.agg(F.max(F.col("id").bitwiseAND(F.lit(LOCID_MASK))).alias("m")).collect()[0]
-                nxt = (row["m"] or 0) + 1
-        return nxt
+    def seed_locids(self, labels) -> None:
+        """Seed the sequence of every unseeded label in ``labels`` from
+        its frame's max locid, in one aggregate over all of them."""
+        cat = self.graph.catalog
+        todo = [l for l in dict.fromkeys(labels) if cat.labels[l].next_locid is None]
+        parts = [self.graph.frames[l].select(
+                     F.lit(l).alias("l"), F.col("id").bitwiseAND(F.lit(LOCID_MASK)).alias("m"))
+                 for l in todo
+                 if self.graph.frames.get(l) is not None and self.graph.frames[l].columns]
+        top: dict[str, int] = {}
+        if parts:
+            u = parts[0]
+            for p in parts[1:]:
+                u = u.unionByName(p)
+            top = {r["l"]: r["m"] for r in u.groupBy("l").agg(F.max("m").alias("m")).collect()}
+        for l in todo:
+            cat.labels[l].next_locid = (top.get(l) or 0) + 1
 
-    def advance_locid(self, label: str, used_past_max: int) -> None:
-        self._next_locid[label] = self.next_locid(label) + used_past_max
+    def take_locids(self, label: str, n: int) -> int:
+        """Reserve ``n`` consecutive locids of a seeded label; returns
+        the first."""
+        meta = self.graph.catalog.labels[label]
+        base = meta.next_locid
+        if base + n - 1 > LOCID_MASK:
+            raise ValueError(
+                f"locid overflow for label {label!r}: base={base} + span={n} "
+                f"exceeds 48-bit locid space")
+        meta.next_locid = base + n
+        return base
 
     # ---- frame mutation ----
 
@@ -120,10 +180,23 @@ class WriteContext:
             cur = self._pin_null_arrays(cur, new_types)
             self.graph.frames[label] = cur.unionByName(new_rows, allowMissingColumns=True)
         self.touched.add(label)
+        self.written.add(label)
 
-    def replace(self, label: str, df: DataFrame) -> None:
+    def update(self, label: str, df: DataFrame) -> None:
+        """Install a frame whose rows this statement updated."""
         self.graph.frames[label] = df
         self.touched.add(label)
+        self.written.add(label)
+
+    def remove(self, label: str, keep: DataFrame) -> None:
+        """Install a frame this statement deleted rows from."""
+        self.graph.frames[label] = keep
+        self.touched.add(label)
+
+    def record_deleted(self, kind: str, ids: DataFrame, n_rows: int) -> None:
+        prev = self.deleted.get(kind)
+        self.deleted[kind] = ((ids, n_rows) if prev is None
+                              else (prev[0].unionByName(ids), prev[1] + n_rows))
 
     def ensure_props(self, label: str, schema: dict[str, str]) -> None:
         meta = self.graph.catalog.labels[label]
@@ -153,20 +226,46 @@ class WriteMixin:
                     out.extend(v for _, v in props.items)
         return out
 
-    def _compile_create(self, c: A.Create) -> None:
+    def _compile_create(self, c: A.Create, single_row: bool = False) -> None:
+        """``single_row``: the caller knows the input is one row."""
         self._begin_write()
-        if self.df is not None:
+        if self.df is None:
+            single_row = True  # no reading clause: the one seed row
+        else:
             self._materialize_path_composites(
                 self._pattern_prop_exprs(c.patterns))
         df = self._ensure_df()
-        # Dense per-batch uids. monotonically_increasing_id() alone
-        # jumps 2^33 between partitions — using its max as the locid
-        # span burns ~2^33 ids per partition per statement and can
-        # overflow the 48-bit locid into labid bits. Instead: the raw
-        # id encodes (partition << 33) | row-in-partition with row
-        # numbers contiguous from 0, so one tiny per-partition count
-        # (rows per partition, never the rows themselves) turns it
-        # into a dense 0..n-1 uid — no global window, no RDD pass.
+        if single_row:
+            span = 1
+            df = df.withColumn("__uid", F.lit(0).cast("long"))
+        else:
+            df, span = self._dense_uids(df)
+        self.wctx.seed_locids(self._create_labels(c.patterns))
+        self.df = df
+        created: list[tuple[str, list[Column]]] = []
+        for pat in c.patterns:
+            self._create_pattern(pat, span, created)
+        self.df = self.df.drop("__uid")
+        if not self.df._jdf.queryExecution().analyzed().deterministic():
+            # a nondeterministic property value (rand(), ...) must be
+            # the same in the committed frame and in later clauses
+            self.df = self.df.localCheckpoint(eager=True)
+        for label, cols in created:
+            self.wctx.append(label, self.df.select(*cols))
+
+    @staticmethod
+    def _dense_uids(df: DataFrame) -> tuple[DataFrame, int]:
+        """Pin ``df`` and number its rows 0..n-1 in ``__uid``; returns
+        the frame and n.
+
+        monotonically_increasing_id() alone jumps 2^33 between
+        partitions — using its max as the locid span burns ~2^33 ids
+        per partition per statement and can overflow the 48-bit locid
+        into labid bits. Instead: the raw id encodes (partition << 33)
+        | row-in-partition with row numbers contiguous from 0, so one
+        tiny per-partition count (rows per partition, never the rows
+        themselves) turns it into a dense uid — no global window, no
+        RDD pass."""
         df = df.withColumn("__mid", F.monotonically_increasing_id())
         df = df.localCheckpoint(eager=True)  # pin ids against recompute
         part = F.shiftrightunsigned(F.col("__mid"), 33)
@@ -185,23 +284,45 @@ class WriteMixin:
         df = df.withColumn(
             "__uid", off_expr + F.col("__mid").bitwiseAND(F.lit((1 << 33) - 1))
         ).drop("__mid")
-        self.df = df
-        for pat in c.patterns:
-            self._create_pattern(pat, span)
-        self.df = self.df.drop("__uid")
+        return df, span
 
-    def _create_pattern(self, pat: A.PathPattern, span: int) -> None:
+    def _create_labels(self, pats) -> list[str]:
+        """Labels a CREATE clause mints ids in, auto-created in the
+        catalog in the order the clause creates elements (each
+        pattern's nodes, then its edges)."""
+        cat = self.wctx.graph.catalog
+        bound = set(self.scope.bindings)
+        out: list[str] = []
+        for pat in pats:
+            for node in pat.elements[0::2]:
+                if node.var in bound or len(node.labels) > 1:
+                    continue  # reuses a bound vertex, or fails below
+                if node.var:
+                    bound.add(node.var)
+                out.append(node.labels[0] if node.labels else DEFAULT_VLABEL)
+                if out[-1] not in cat.labels:
+                    cat.create_vlabel(out[-1])
+            for rel in pat.elements[1::2]:
+                if len(rel.types) == 1:
+                    out.append(rel.types[0])
+                    if out[-1] not in cat.labels:
+                        cat.create_elabel(out[-1])
+        return out
+
+    def _create_pattern(self, pat: A.PathPattern, span: int,
+                        created: list[tuple[str, list[Column]]]) -> None:
         els = pat.elements
         if pat.kind != "plain":
             raise ValueError("CREATE pattern cannot use path-finding forms")
         # nodes first (so edges can reference both endpoints)
         node_vars: list[str] = []
         for i in range(0, len(els), 2):
-            node_vars.append(self._create_node(els[i], span))
+            node_vars.append(self._create_node(els[i], span, created))
         evars: list[str] = []
         for i in range(1, len(els), 2):
             rel: A.RelPat = els[i]
-            evars.append(self._create_edge(rel, node_vars[(i - 1) // 2], node_vars[(i + 1) // 2], span))
+            evars.append(self._create_edge(rel, node_vars[(i - 1) // 2],
+                                           node_vars[(i + 1) // 2], span, created))
         if pat.var is not None:
             vids = [F.array(F.col(f"{v}__id")) for v in node_vars]
             eids = [F.array(F.col(f"{e}__id")) for e in evars]
@@ -260,7 +381,8 @@ class WriteMixin:
             out.append((key, ec.col(val)))
         return out
 
-    def _create_node(self, node: A.NodePat, span: int) -> str:
+    def _create_node(self, node: A.NodePat, span: int,
+                     created: list[tuple[str, list[Column]]]) -> str:
         var = node.var or self.scope.fresh_anon()
         bound = self.scope.get(var)
         if bound is not None:
@@ -272,40 +394,14 @@ class WriteMixin:
         if len(node.labels) > 1:
             raise ValueError("CREATE node takes at most one label")
         label = node.labels[0] if node.labels else DEFAULT_VLABEL
-        cat = self.wctx.graph.catalog
-        if label not in cat.labels:
-            cat.create_vlabel(label)
-        labid = cat.labels[label].labid
-
-        base = self.wctx.next_locid(label)
-        if base + span - 1 > LOCID_MASK:
-            raise ValueError(
-                f"locid overflow for label {label!r}: base={base} + span={span} "
-                f"exceeds 48-bit locid space")
-        prop_cols = [(prop_col_name(k), col) for k, col in self._eval_props(node.props)]
-        id_col = graphid_col(labid, F.lit(base) + F.col("__uid"))
-        self.df = self.df.withColumn(f"{var}__id", id_col) \
-                         .withColumn(f"{var}__label", F.lit(label))
-        for k, col in prop_cols:
-            self.df = self.df.withColumn(f"{var}__{k}", col)
-        self.df = self.df.localCheckpoint(eager=True)
-
-        new_rows = self.df.select(
-            F.col(f"{var}__id").alias("id"),
-            *[F.col(f"{var}__{k}").alias(k) for k, _ in prop_cols],
-        )
-        types = dict(zip(new_rows.columns, [f.dataType.simpleString() for f in new_rows.schema.fields]))
-        self.wctx.ensure_props(label, {
-            prop_display_name(k): types[k] for k, _ in prop_cols})
-        self.wctx.append(label, new_rows)
-        self.wctx.advance_locid(label, span)
-        # span IS the pipeline row count (derived driver-side by the
-        # id-allocation partition-count pass) — no per-element count job
+        self._mint(var, "vertex", label, span, {}, node.props, created)
+        # span IS the pipeline row count (known driver-side from the
+        # id allocation) — no per-element count job
         self.wctx.stats.insertedvertices += span
-        self.scope.bind(Binding(var, "vertex", labels=[label], props=[k for k, _ in prop_cols]))
         return var
 
-    def _create_edge(self, rel: A.RelPat, lvar: str, rvar: str, span: int) -> str:
+    def _create_edge(self, rel: A.RelPat, lvar: str, rvar: str, span: int,
+                     created: list[tuple[str, list[Column]]]) -> str:
         if rel.varlen:
             raise ValueError("CREATE cannot use variable-length relationships")
         if rel.direction == "undir":
@@ -315,41 +411,33 @@ class WriteMixin:
         var = rel.var or self.scope.fresh_anon()
         if self.scope.get(var) is not None:
             raise ValueError(f"edge variable {var!r} already bound")
-        label = rel.types[0]
-        cat = self.wctx.graph.catalog
-        if label not in cat.labels:
-            cat.create_elabel(label)
-        labid = cat.labels[label].labid
-
         src, dst = (lvar, rvar) if rel.direction == "out" else (rvar, lvar)
-        base = self.wctx.next_locid(label)
-        if base + span - 1 > LOCID_MASK:
-            raise ValueError(
-                f"locid overflow for label {label!r}: base={base} + span={span} "
-                f"exceeds 48-bit locid space")
-        prop_cols = [(prop_col_name(k), col) for k, col in self._eval_props(rel.props)]
-        self.df = self.df.withColumn(f"{var}__id", graphid_col(labid, F.lit(base) + F.col("__uid"))) \
-                         .withColumn(f"{var}__start", F.col(f"{src}__id")) \
-                         .withColumn(f"{var}__end", F.col(f"{dst}__id")) \
-                         .withColumn(f"{var}__label", F.lit(label))
-        for k, col in prop_cols:
-            self.df = self.df.withColumn(f"{var}__{k}", col)
-        self.df = self.df.localCheckpoint(eager=True)
+        ends = {"start": F.col(f"{src}__id"), "end": F.col(f"{dst}__id")}
+        self._mint(var, "edge", rel.types[0], span, ends, rel.props, created)
+        self.wctx.stats.insertededges += span
+        return var
 
-        new_rows = self.df.select(
-            F.col(f"{var}__id").alias("id"),
-            F.col(f"{var}__start").alias("start"),
-            F.col(f"{var}__end").alias("end"),
-            *[F.col(f"{var}__{k}").alias(k) for k, _ in prop_cols],
-        )
-        types = dict(zip(new_rows.columns, [f.dataType.simpleString() for f in new_rows.schema.fields]))
+    def _mint(self, var: str, kind: str, label: str, span: int,
+              ends: dict[str, Column], props: A.MapLit | None,
+              created: list[tuple[str, list[Column]]]) -> None:
+        """Add a created element's columns to the pipeline (graphid
+        from the label's sequence, endpoint ids, property values), bind
+        ``var`` and queue the label frame's new rows in ``created``."""
+        prop_cols = [(prop_col_name(k), col) for k, col in self._eval_props(props)]
+        labid = self.wctx.graph.catalog.labels[label].labid
+        base = self.wctx.take_locids(label, span)
+        cols = {"id": graphid_col(labid, F.lit(base) + F.col("__uid")), **ends}
+        self.df = self.df.withColumns(
+            {**{f"{var}__{c}": v for c, v in cols.items()},
+             f"{var}__label": F.lit(label),
+             **{f"{var}__{k}": col for k, col in prop_cols}})
+        row_cols = [F.col(f"{var}__{c}").alias(c) for c in [*cols, *(k for k, _ in prop_cols)]]
+        types = {f.name: f.dataType.simpleString()
+                 for f in self.df.select(*row_cols).schema.fields}
         self.wctx.ensure_props(label, {
             prop_display_name(k): types[k] for k, _ in prop_cols})
-        self.wctx.append(label, new_rows)
-        self.wctx.advance_locid(label, span)
-        self.wctx.stats.insertededges += span
-        self.scope.bind(Binding(var, "edge", labels=[label], props=[k for k, _ in prop_cols]))
-        return var
+        created.append((label, row_cols))
+        self.scope.bind(Binding(var, kind, labels=[label], props=[k for k, _ in prop_cols]))
 
     # ------------------------------------------------------------------
     # DELETE / DETACH DELETE  (reference: execCypherDelete.c:45,215 —
@@ -365,83 +453,91 @@ class WriteMixin:
         # graph.c:1259) — pre-join them here so the expression layer
         # never falls back to bare id arrays
         self._materialize_path_composites(list(d.exprs))
-        v_victims: list[DataFrame] = []
-        e_victims: list[DataFrame] = []
+        # every target's ids as one kind-tagged array per matched row,
+        # so one job computes the matched rows for all targets
+        kinds: set[str] = set()
+        tagged: list[Column] = []
+
+        def tag(kind: str, ids: Column) -> None:
+            kinds.add(kind)
+            ids = F.coalesce(ids.cast("array<bigint>"), F.array().cast("array<bigint>"))
+            tagged.append(F.transform(ids, lambda x: F.struct(
+                F.lit(kind).alias("k"), x.alias("id"))))
+
         for e in d.exprs:
             if not isinstance(e, A.Var):
                 # entity-valued EXPRESSION: vertices(p)[i],
                 # start_vertex(r)/end_vertex(r) — delete by its id
                 # (cypher_dml.sql:658-662); kind from the expression root
                 kind = self._delete_expr_kind(e)
-                ec = self._ec()
-                t = ec.tc(e)
+                t = self._ec().tc(e)
                 import pyspark.sql.types as _T
                 col = t.col
                 if isinstance(t.dtype, _T.StructType) and any(
                         f.name == "id" for f in t.dtype.fields):
                     col = col.getField("id")
-                victims = self.df.select(col.cast("long").alias("id"))                                  .where(F.col("id").isNotNull()).distinct()
-                (v_victims if kind == "v" else e_victims).append(victims)
+                tag(kind, F.array(col))
                 continue
             b = self.scope.require(e.name)
             if b.kind == "vertex":
-                v_victims.append(self.df.select(F.col(f"{e.name}__id").alias("id")).distinct())
+                tag("v", F.array(F.col(f"{e.name}__id")))
             elif b.kind == "edge":
-                e_victims.append(self.df.select(F.col(f"{e.name}__id").alias("id")).distinct())
+                tag("e", F.array(F.col(f"{e.name}__id")))
             elif b.kind == "path":
-                v_victims.append(self.df.select(F.explode(f"{e.name}__vids").alias("id")).distinct())
-                e_victims.append(self.df.select(F.explode(f"{e.name}__eids").alias("id")).distinct())
+                tag("v", F.col(f"{e.name}__vids"))
+                tag("e", F.col(f"{e.name}__eids"))
             else:
                 raise ValueError(f"cannot DELETE {b.kind} variable {e.name!r}")
-
-        vdf = self._union_ids(v_victims)
-        edf = self._union_ids(e_victims)
-        g = self.wctx.graph
+        victims, n = materialize(
+            self.df.select(F.explode(F.concat(*tagged)).alias("x"))
+            .select("x.k", "x.id").where(F.col("id").isNotNull()).distinct())
 
         # Explicit edge victims FIRST: the incident-edge pass below then
         # runs against already-updated frames, so an edge that is both
         # explicitly deleted and incident to a deleted vertex is counted
         # (and removed) exactly once, and the non-detach dangling check
-        # needs no manual edf exclusion. Stats come from per-label
-        # victim counts (one tiny job per victim frame, not two frame
-        # counts per label).
-        if edf is not None:
-            edf = edf.localCheckpoint(eager=True)
-            for lbl, n_del in self._victim_label_counts(edf, "e").items():
-                f = g.frames[lbl]
-                keep = f.join(edf.withColumnRenamed("id", "__eid"),
-                              f["id"] == F.col("__eid"), "left_anti").localCheckpoint(eager=True)
-                self.wctx.stats.deletededges += n_del
-                self.wctx.replace(lbl, keep)
-            self.wctx.deleted_kinds.add("e")
-        if vdf is not None:
-            vdf = vdf.localCheckpoint(eager=True)
-            if not d.detach:
-                # any surviving incident edge → error (reference parity);
-                # one job over the tagged union of edge frames
-                inc = self._incident_counts(vdf)
-                if inc:
-                    lbl = sorted(inc)[0]
-                    raise ValueError(
-                        f"vertices in {lbl!r} still have edges; use DETACH DELETE")
-            else:
-                for lbl, n_del in self._incident_counts(vdf).items():
+        # needs no manual exclusion.
+        if "e" in kinds:
+            self._remove_ids("e", victims.where(F.col("k") == "e").select("id"), n)
+        if "v" in kinds:
+            vdf = victims.where(F.col("k") == "v").select("id")
+            hit = self._incident_edges(vdf, n)
+            inc = {} if hit is None else {
+                r["__lbl"]: r["n"] for r in
+                hit.groupBy("__lbl").agg(F.count(F.lit(1)).alias("n")).collect()}
+            if inc and not d.detach:
+                # any surviving incident edge → error (reference parity)
+                raise ValueError(
+                    f"vertices in {sorted(inc)[0]!r} still have edges; use DETACH DELETE")
+            if inc:
+                self.wctx.seed_locids(inc)
+                g = self.wctx.graph
+                vids = changeset(vdf.withColumnRenamed("id", "__vid"), n)
+                for lbl, n_del in inc.items():
                     ef = g.frames[lbl]
-                    keep = ef.join(
-                        vdf.withColumnRenamed("id", "__vid"),
-                        (ef["start"] == F.col("__vid")) | (ef["end"] == F.col("__vid")),
-                        "left_anti")
-                    keep = keep.localCheckpoint(eager=True)
+                    self.wctx.remove(lbl, ef.join(
+                        vids, (ef["start"] == F.col("__vid")) | (ef["end"] == F.col("__vid")),
+                        "left_anti"))
                     self.wctx.stats.deletededges += n_del
-                    self.wctx.replace(lbl, keep)
-                    self.wctx.deleted_kinds.add("e")
-            for lbl, n_del in self._victim_label_counts(vdf, "v").items():
-                f = g.frames[lbl]
-                keep = f.join(vdf.withColumnRenamed("id", "__vid"),
-                              f["id"] == F.col("__vid"), "left_anti").localCheckpoint(eager=True)
-                self.wctx.stats.deletedvertices += n_del
-                self.wctx.replace(lbl, keep)
-            self.wctx.deleted_kinds.add("v")
+                self.wctx.record_deleted("e", hit.select("id"), sum(inc.values()))
+            self._remove_ids("v", vdf, n)
+
+    def _remove_ids(self, kind: str, ids: DataFrame, n_rows: int) -> None:
+        """Delete the ``kind`` elements with these ids (at most
+        ``n_rows``) from their label frames, lazily, and count them."""
+        counts = self._victim_label_counts(ids, kind)
+        # seed from the frames as they were before the delete, so the
+        # deleted ids are never handed out again
+        self.wctx.seed_locids(counts)
+        gone = changeset(ids.withColumnRenamed("id", "__gone"), n_rows)
+        for lbl in counts:
+            f = self.wctx.graph.frames[lbl]
+            self.wctx.remove(lbl, f.join(gone, f["id"] == F.col("__gone"), "left_anti"))
+        if kind == "v":
+            self.wctx.stats.deletedvertices += sum(counts.values())
+        else:
+            self.wctx.stats.deletededges += sum(counts.values())
+        self.wctx.record_deleted(kind, ids, n_rows)
 
     def _delete_expr_kind(self, e: A.Expr) -> str:
         """'v' or 'e' for an entity-valued DELETE expression."""
@@ -459,68 +555,47 @@ class WriteMixin:
             "DELETE takes bound variables or entity-valued expressions "
             "(vertices(p)[i], start_vertex(r), ...)")
 
-    @staticmethod
-    def _union_ids(dfs: list[DataFrame]) -> DataFrame | None:
-        if not dfs:
-            return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out.distinct()
-
     def _victim_label_counts(self, victims: DataFrame, kind: str) -> dict[str, int]:
-        """Per-label count of victim ids that EXIST in their label frame
-        — serves both label pruning and the deleted-stats counters.
+        """Per-label count of victim ids that still EXIST in their label
+        frame — serves both label pruning and the deleted-stats counters.
 
-        Fast path (no earlier DELETE of this kind in the statement):
-        every victim necessarily still exists (victims come from a MATCH
-        against the working graph, and only DELETE removes entities), so
-        ONE tiny groupBy over the victims' own labid bits (the label
-        lives in the id's high bits) yields exact counts without
-        touching any frame. Repeated-delete path (DELETE a ... DELETE a,
-        cypher_dml.sql:689-784): an id may already be gone, so the
-        labid-pruned candidate frames are union-scanned ONCE with a
-        semi-join for the exact surviving counts — two jobs total
-        instead of two frame counts per label."""
+        Victims come from a MATCH against the working graph, and only
+        DELETE removes entities, so a victim is gone only when this
+        statement already deleted it (DELETE a ... DELETE a,
+        cypher_dml.sql:689-784). Those ids are dropped by an anti-join
+        against the ids recorded as deleted (victim sets, and for DETACH
+        the incident-edge query), never by re-scanning the rewritten
+        frames. ONE groupBy over the victims' own labid bits (the label
+        lives in the id's high bits) then yields exact counts."""
         cat = self.wctx.graph.catalog
         frames = self.wctx.graph.frames
+        prior = self.wctx.deleted.get(kind)
+        if prior is not None:
+            victims = victims.join(changeset(*prior), "id", "left_anti")
         by_labid = {r["l"]: r["n"] for r in victims.groupBy(
             F.shiftrightunsigned(F.col("id"), LOCID_BITS).alias("l"))
             .agg(F.count(F.lit(1)).alias("n")).collect()}
         names = cat.vlabels() if kind == "v" else cat.elabels()
-        cand = {n: by_labid[cat.labels[n].labid] for n in names
+        return {n: by_labid[cat.labels[n].labid] for n in names
                 if cat.labels[n].labid in by_labid and n in frames}
-        if kind not in self.wctx.deleted_kinds:
-            return cand
-        parts = [frames[n].select("id", F.lit(n).alias("__lbl")) for n in cand]
-        if not parts:
-            return {}
-        allids = parts[0]
-        for p in parts[1:]:
-            allids = allids.unionByName(p)
-        rows = (allids.join(victims.select("id"), "id", "left_semi")
-                .groupBy("__lbl").agg(F.count(F.lit(1)).alias("n")).collect())
-        return {r["__lbl"]: r["n"] for r in rows}
 
-    def _incident_counts(self, vdf: DataFrame) -> dict[str, int]:
-        """Edges incident to the victim vertices, counted per edge label
-        in ONE job over a tagged union of the edge frames (which already
-        reflect this clause's explicit edge deletions, so nothing is
-        double-counted). Labels with zero incident edges are absent —
-        their frames are neither counted nor rewritten."""
+    def _incident_edges(self, vdf: DataFrame, n_rows: int) -> DataFrame | None:
+        """``(id, __lbl)`` of the edges incident to the victim vertices
+        ``vdf`` (at most ``n_rows``), over a tagged union of the edge
+        frames (which already reflect this clause's explicit edge
+        deletions, so nothing is double-counted)."""
         g = self.wctx.graph
-        parts = [g.frames[n].select("start", "end", F.lit(n).alias("__lbl"))
+        parts = [g.frames[n].select("id", "start", "end", F.lit(n).alias("__lbl"))
                  for n in g.catalog.elabels() if n in g.frames]
         if not parts:
-            return {}
+            return None
         u = parts[0]
         for p in parts[1:]:
             u = u.unionByName(p)
-        vids = vdf.select(F.col("id").alias("__vid"))
-        hit = u.join(vids, (u["start"] == F.col("__vid"))
-                     | (u["end"] == F.col("__vid")), "left_semi")
-        return {r["__lbl"]: r["n"] for r in
-                hit.groupBy("__lbl").agg(F.count(F.lit(1)).alias("n")).collect()}
+        vids = changeset(vdf.select(F.col("id").alias("__vid")), n_rows)
+        return (u.join(vids, (u["start"] == F.col("__vid"))
+                       | (u["end"] == F.col("__vid")), "left_semi")
+                .select("id", "__lbl"))
 
     # ------------------------------------------------------------------
     # SET / REMOVE  (reference: execCypherSet.c:141 ExecSetGraph; `+=`
@@ -594,9 +669,8 @@ class WriteMixin:
             nm = f"__new_{k}"
             names.append(k)
             upd_cols.append((col if col is not None else F.lit(None)).alias(nm))
-        updates = self.df.select(*upd_cols).dropDuplicates(["__uid_key"])
-        updates = updates.localCheckpoint(eager=True)
-        n_upd = updates.count()
+        updates, n_upd = materialize(
+            self.df.select(*upd_cols).dropDuplicates(["__uid_key"]))
 
         cat = self.wctx.graph.catalog
         upd_schema = {f.name: f.dataType for f in updates.schema.fields}
@@ -605,7 +679,7 @@ class WriteMixin:
             if frame is None:
                 continue  # label exists in the hierarchy but holds no rows
             meta = cat.labels[lbl]
-            joined = frame.join(F.broadcast(updates) if n_upd < 1_000_000 else updates,
+            joined = frame.join(changeset(updates, n_upd),
                                 frame["id"] == F.col("__uid_key"), "left")
             matched = F.col("__uid_key").isNotNull()
             out_cols: list[Column] = [frame["id"].alias("id")]
@@ -628,7 +702,7 @@ class WriteMixin:
             for mc in assigns:
                 if mc not in handled and prop_display_name(mc) not in meta.props:
                     out_cols.append(F.when(matched, F.col(f"__new_{mc}")).otherwise(F.lit(None)).alias(mc))
-            self.wctx.replace(lbl, joined.select(*out_cols))
+            self.wctx.update(lbl, joined.select(*out_cols))
             for p, col in assigns.items():
                 if col is not None:
                     t = upd_schema[f"__new_{p}"].simpleString()
@@ -922,7 +996,8 @@ class WriteMixin:
         # on the creation key so concurrent duplicates collapse
         # (single-writer batch + dedup-before-append)
         created: DataFrame | None = None
-        if missing.take(1):
+        has_missing = bool(missing.take(1))
+        if has_missing:
             sub = self._spawn_subcompiler()
             key_cols = [f"{v}__id" for v in renames]
             tmp_keys: list[str] = []
@@ -944,7 +1019,9 @@ class WriteMixin:
             sub.df = miss_in
             sub.scope = self.scope.copy()
             sub.wctx = self.wctx
-            sub._compile_create(A.Create([pat]))
+            # a leading MERGE probes with the one seed row: at most one
+            # row misses, and miss_in is that row
+            sub._compile_create(A.Create([pat]), single_row=first)
             if m.on_create:
                 sub._compile_set(A.SetClause(m.on_create))
             for v, b in sub.scope.bindings.items():
@@ -968,7 +1045,8 @@ class WriteMixin:
                 # every missing input row
                 created = missing.crossJoin(F.broadcast(sub.df.select(*new_cols)))
 
-        if m.on_match and matched.take(1):
+        # a leading MERGE either matched or missed its one seed row
+        if m.on_match and (not has_missing if first else matched.take(1)):
             sub = self._spawn_subcompiler()
             sub.df = matched
             sub.scope = self.scope.copy()

@@ -61,11 +61,17 @@ class Graph:
         if label not in self.catalog.labels:
             raise ValueError(f"label {label!r} not in catalog")
         self.frames[label] = df
-        # any frame change invalidates the cached statistics: the
-        # reference maintains ag_graphmeta incrementally from write stats
-        # (regather_graphmeta, graphmeta.c); our snapshot analog is
-        # invalidate-on-write + lazy recompute at next read, so a stats
-        # read is never stale relative to the installed frames
+        # a frame installed from outside the write path may hold any
+        # locids: the label's id sequence re-seeds from it on next use
+        self.catalog.labels[label].next_locid = None
+        # any frame change drops the cached statistics, so a stats read
+        # is never stale relative to the installed frames. Nothing
+        # recomputes them: label_counts()/edge_triples() return None
+        # (and the compiler's stats-driven choices stand down) until
+        # collect_stats()/collect_edge_stats() run again. A committed
+        # write installs a new Graph, which starts without stats too.
+        # The reference instead maintains ag_graphmeta incrementally
+        # from write stats (regather_graphmeta, graphmeta.c).
         self._label_counts = None
         self._edge_triples = None
 

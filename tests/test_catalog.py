@@ -31,8 +31,10 @@ def test_json_roundtrip():
     cat = GraphCatalog("g")
     cat.create_vlabel("v", props={"x": "bigint"})
     cat.create_elabel("e")
+    cat.labels["v"].next_locid = 42
     cat2 = GraphCatalog.from_json(cat.to_json())
     assert cat2.labels["v"].props == {"x": "bigint"}
+    assert cat2.labels["v"].next_locid == 42 and cat2.labels["e"].next_locid is None
     assert cat2.labels["e"].kind == "e"
     assert cat2.labels["v"].labid == cat.labels["v"].labid
 

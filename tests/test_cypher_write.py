@@ -315,3 +315,128 @@ def test_delete_stat_jobs_one_per_victim_kind(spark, monkeypatch):
     # exact path adds one union-scan semi-join aggregate (<= 2 more
     # AQE jobs); still one helper call per victim frame
     assert len(jobs_per_call) == 2 and all(j <= 4 for j in jobs_per_call), jobs_per_call
+
+
+def _locids(eng, label):
+    return sorted(r["i"] & ((1 << 48) - 1) for r in eng.cypher(
+        f"MATCH (n:{label}) RETURN n.id AS i").collect())
+
+
+def test_locids_consecutive_within_statement(eng):
+    # two elements of one label in one statement take consecutive
+    # locids from the label's sequence (no gap from a re-scan after
+    # the first append)
+    eng.cypher("CREATE (:lgap {v: 1}), (:lgap {v: 2})")
+    assert _locids(eng, "lgap") == [1, 2]
+    eng.cypher("CREATE (:lgap {v: 3})-[:lgap_e]->(:lgap {v: 4}), (:lgap {v: 5})")
+    assert _locids(eng, "lgap") == [1, 2, 3, 4, 5]
+
+
+def test_create_nondeterministic_value_is_committed(eng):
+    # the created rows stay lazy until commit, so a nondeterministic
+    # property value must be pinned once: what RETURN shows is what
+    # the graph holds (with and without a reading clause)
+    for stmt in ("CREATE (n:rnd {r: rand()}) RETURN n.id AS i, n.r AS r",
+                 "UNWIND range(1, 4) AS k CREATE (n:rnd {r: rand()}) "
+                 "RETURN n.id AS i, n.r AS r"):
+        got = sorted(tuple(r) for r in eng.cypher(stmt).collect())
+        held = {tuple(r) for r in eng.cypher(
+            "MATCH (n:rnd) RETURN n.id AS i, n.r AS r").collect()}
+        assert got and set(got) <= held
+
+
+def test_deleted_graphid_never_reused(spark, eng):
+    """The reference's ag_label_seq never hands out an id twice: a
+    CREATE after deleting the newest element gets a fresh graphid, both
+    when earlier writes seeded the sequence and when the label's frame
+    was installed from outside the write path."""
+    from agensgraph_spark.graphid import make_graphid
+    eng.cypher("CREATE (:reuse {v: 1}), (:reuse {v: 2}), (:reuse {v: 3})")
+    gone = eng.cypher("MATCH (n:reuse {v: 3}) RETURN n.id AS i").collect()[0]["i"]
+    eng.cypher("MATCH (n:reuse {v: 3}) DELETE n")
+    eng.cypher("CREATE (:reuse {v: 4})")
+    new = eng.cypher("MATCH (n:reuse {v: 4}) RETURN n.id AS i").collect()[0]["i"]
+    assert new != gone and new & ((1 << 48) - 1) == 4
+
+    g = Graph(GraphCatalog("seq"))
+    labid = g.catalog.create_vlabel("ext", props={"v": "bigint"}).labid
+    g.set_label_df("ext", spark.createDataFrame(
+        [(make_graphid(labid, i), i) for i in (1, 2, 3)], "id long, v long"))
+    e2 = CypherEngine(spark, g)
+    e2.cypher("MATCH (n:ext {v: 3}) DELETE n")
+    e2.cypher("CREATE (:ext {v: 4})")
+    assert _locids(e2, "ext") == [1, 2, 4]
+
+
+def test_delete_only_statement_skips_constraint_sweep(spark, monkeypatch):
+    """A delete cannot break a unique or check constraint: a delete-only
+    statement on a constrained label starts no constraint job, while an
+    insert into it still runs the sweep."""
+    from agensgraph_spark.cypher import ddl
+    calls: list[str] = []
+    orig = ddl.validate_constraints
+
+    def counting(*args, **kwargs):
+        calls.append(",".join(c.label for c in kwargs.get("constraints") or []))
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(ddl, "validate_constraints", counting)
+    e = CypherEngine(spark)
+    e.cypher("CREATE GRAPH cdel")
+    e.cypher("CREATE VLABEL ck")
+    e.cypher("CREATE UNIQUE PROPERTY INDEX ON ck (k)")
+    e.cypher("CREATE CONSTRAINT ON ck ASSERT k > 0")
+    e.cypher("UNWIND [1, 2, 3] AS k CREATE (:ck {k: k})")
+    assert calls == ["ck,ck"]
+    calls.clear()
+    sc = spark.sparkContext
+    sc.setJobGroup("cdel-probe", "delete-only")
+    try:
+        e.cypher("MATCH (n:ck {k: 2}) DELETE n")
+    finally:
+        sc.setJobGroup(None, None)
+    assert calls == [] and e.last_write_stats["deletedvertices"] == 1
+    assert sc.statusTracker().getJobIdsForGroup("cdel-probe")  # the delete ran
+    with pytest.raises(ValueError, match="unique"):
+        e.cypher("CREATE (:ck {k: 1})")
+    assert calls == ["ck,ck"]
+
+
+# The four write shapes of the interactive benchmark on a small graph,
+# each measured after the statements that set it up. Bounds are the job
+# counts measured once write work was sized by change-sets (jobs counted
+# by job group, as in test_delete_stat_jobs_one_per_victim_kind), with
+# no slack; sized by the labels touched, the same statements started
+# 24, 9, 22-26 and 28 jobs.
+_WRITE_SHAPES = {
+    "create": ([], "CREATE (c:wc {k: 100, bal: 1.0})-[:wp]->(o:wo {ok: 1000})", 6),
+    "set": ([], "MATCH (c:wc) WHERE c.k >= 2 AND c.k < 6 SET c.bal = c.bal + 1.0", 7),
+    "merge": ([], "MERGE (s:ws {name: 'new'}) ON CREATE SET s.bal = 0.0 "
+                  "ON MATCH SET s.bal = s.bal + 1.0", 9),
+    "detach_delete": (
+        ["CREATE (c:wc {k: 100, bal: 1.0})-[:wp]->(o:wo {ok: 1000})",
+         "MERGE (s:ws {name: 'new'}) ON CREATE SET s.bal = 0.0"],
+        "MATCH (c:wc)-[:wp]->(o:wo), (s:ws) WHERE c.k = 100 AND s.name = 'new' "
+        "DETACH DELETE c, o, s", 19),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_WRITE_SHAPES))
+def test_write_job_budget(spark, shape):
+    prelude, stmt, bound = _WRITE_SHAPES[shape]
+    e = CypherEngine(spark, Graph(GraphCatalog(f"wb_{shape}")))
+    e.cypher("UNWIND range(1, 8) AS k CREATE (c:wc {k: k, bal: 1.0})"
+             "-[:wp]->(:wo {ok: k}), (c)-[:wn]->(:wnat {n: k})")
+    e.cypher("UNWIND ['s1', 's2', 's3'] AS nm CREATE (:ws {name: nm, bal: 0.0})")
+    e.cypher("CREATE CONSTRAINT ON wc ASSERT k IS UNIQUE")
+    for p in prelude:
+        e.cypher(p)
+    sc = spark.sparkContext
+    group = f"wbudget-{shape}"
+    sc.setJobGroup(group, "write budget")
+    try:
+        e.cypher(stmt).write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= bound, (shape, jobs)
