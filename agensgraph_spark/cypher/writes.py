@@ -61,6 +61,7 @@ from agensgraph_spark.cypher import ast as A
 from agensgraph_spark.cypher.scope import Binding
 from agensgraph_spark.graph import Graph, prop_col_name, prop_display_name
 from agensgraph_spark.graphid import LOCID_BITS, LOCID_MASK, graphid_col
+from agensgraph_spark.operators import iterate
 
 DEFAULT_VLABEL = "ag_vertex"
 
@@ -81,7 +82,7 @@ def materialize(df: DataFrame) -> tuple[DataFrame, int]:
     checkpointed RDD, so computing it stores the checkpoint too. An
     eager checkpoint followed by count() takes three jobs: the
     checkpoint, then the count as a two-stage aggregate."""
-    out = df.localCheckpoint(eager=False)
+    out = iterate.materialize(df, eager=False)
     return out, out._jdf.rdd().count()
 
 
@@ -249,7 +250,7 @@ class WriteMixin:
         if not self.df._jdf.queryExecution().analyzed().deterministic():
             # a nondeterministic property value (rand(), ...) must be
             # the same in the committed frame and in later clauses
-            self.df = self.df.localCheckpoint(eager=True)
+            self.df = iterate.materialize(self.df)
         for label, cols in created:
             self.wctx.append(label, self.df.select(*cols))
 
@@ -267,7 +268,7 @@ class WriteMixin:
         themselves) turns it into a dense uid — no global window, no
         RDD pass."""
         df = df.withColumn("__mid", F.monotonically_increasing_id())
-        df = df.localCheckpoint(eager=True)  # pin ids against recompute
+        df = iterate.materialize(df)  # pin ids against recompute
         part = F.shiftrightunsigned(F.col("__mid"), 33)
         counts = sorted(
             df.groupBy(part.alias("__p")).count().collect(),
@@ -984,7 +985,7 @@ class WriteMixin:
         joined = self.df.join(right, cond if cond is not None else F.lit(True), "left")
         joined = joined.drop(*[c for tmp in renames.values()
                                for c in right.columns if c.startswith(f"{tmp}__")])
-        joined = joined.localCheckpoint(eager=True)
+        joined = iterate.materialize(joined)
         matched = joined.filter(F.col(probe_col).isNotNull())
         missing = joined.filter(F.col(probe_col).isNull()) \
                         .drop(*[c for c in right.columns if c in joined.columns])

@@ -118,26 +118,7 @@ class Graph:
         labels = [label] if only else self.catalog.descendants(label)
         return self._union(labels)
 
-    def edges_multi(self, labels: list[str]) -> DataFrame:
-        """Union scan for multi-type edge patterns ``[:A|B]`` (reference:
-        genEdgeUnion, src/backend/parser/parse_graph.c:2100)."""
-        expanded: list[str] = []
-        for lbl in labels:
-            for d in self.catalog.descendants(lbl):
-                if d not in expanded:
-                    expanded.append(d)
-        return self._union(expanded)
-
     # ---- property document view (jsonb parity) ----
-
-    def props_json(self, label: str) -> DataFrame:
-        """Label df with a ``properties`` JSON column reconstructed from
-        the typed columns — the reference's jsonb document shape."""
-        meta = self.catalog.labels[label]
-        df = self.frames[label]
-        present = [p for p in meta.props if p in df.columns]
-        doc = F.to_json(F.struct(*[F.col(p) for p in present])) if present else F.lit("{}")
-        return df.withColumn("properties", doc)
 
     def vertex_composites(self) -> DataFrame:
         """(id, label, properties) over every vertex label — the lookup
@@ -271,13 +252,6 @@ class Graph:
                 .withColumn("end", F.element_at(name_of, F.col("end_labid").cast("int")))
                 .filter(F.col("start").isNotNull() & F.col("end").isNotNull())
                 .select("start", F.col("edge_label").alias("edge"), "end", "edgecount"))
-
-    # ---- SQL interop (reference: Cypher results usable as SQL relations) ----
-
-    def register_views(self, prefix: str | None = None) -> None:
-        pre = f"{prefix}_" if prefix else f"{self.catalog.name}_"
-        for lbl in self.catalog.labels:
-            self._stamped(lbl).createOrReplaceTempView(f"{pre}{lbl}")
 
     # ---- persistence: immutable snapshot model ----
 

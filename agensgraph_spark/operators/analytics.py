@@ -5,15 +5,19 @@ GDS-style library; these are extensions, like streaming).
 Operators take a plain (src, dst) edge DataFrame — the compiler's edge
 scans, a label snapshot, or any relational projection — so they compose
 with both the Cypher layer and raw tables. All of them are expressed as
-joins + aggregates (Catalyst-optimizable, AQE-broadcastable); pagerank
-truncates its lineage every 6 rounds so user-supplied iteration counts
-stay bounded.
+joins + aggregates (Catalyst-optimizable, AQE-broadcastable). Every
+generation and shared subtree is materialized through
+``operators/iterate.py`` (eager, lazy, or every ``TRUNCATE_EVERY``
+rounds), so user-supplied iteration counts keep a bounded plan and the
+reliable-checkpoint opt-in reaches every loop here.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from agensgraph_spark.operators.iterate import materialize, truncate
 
 
 def degree_stats(
@@ -54,24 +58,19 @@ def pagerank(
     Returns (id, pr double).
 
     Lineage guard: the plan doubles per iteration (pr feeds both the
-    contribution join and the rank update), so every 6th round the rank
-    frame is localCheckpoint-truncated — the same generational
-    discipline as the path operators (operators/paths.py) and
-    connected_components. Short runs (iters <= 6, including the
-    oracle-replayed default of 3) never checkpoint, keeping their plan
-    a pure closed-form join chain."""
-    # r14: verts and the degree-annotated edge relation are shared by
-    # every iteration (and verts additionally by each rank update) —
-    # lazy localCheckpoint rewrites each to ONE LogicalRDD computed at
-    # the first action instead of re-inlining the scan+join subtree
-    # once per reference (same truncation as harmonic_sampled; no
-    # extra job, values unchanged)
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
+    contribution join and the rank update), so the rank frame is
+    truncated every ``TRUNCATE_EVERY`` rounds (``iterate.truncate``).
+    Short runs (iters <= 6, including the oracle-replayed default of 3)
+    never checkpoint, keeping their plan a pure closed-form join
+    chain."""
+    # verts and the degree-annotated edge relation are shared by every
+    # iteration: lazily materialized once (iterate's shared-subtree form)
+    verts = materialize(vertices.select("id").distinct(), eager=False)
     deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("_deg"))
     # (src, dst, src out-degree): static across iterations
-    ed = (edges.join(deg.withColumnRenamed("id", "src"), "src")
-          .localCheckpoint(eager=False))
+    ed = materialize(edges.join(deg.withColumnRenamed("id", "src"), "src"),
+                     eager=False)
     pr = verts.select("id", F.lit(1.0).alias("pr"))
     for i in range(iters):
         contrib = (ed.join(pr.withColumnRenamed("id", "src"), "src")
@@ -81,8 +80,7 @@ def pagerank(
               .select("id",
                       (F.lit(1.0 - damping)
                        + F.lit(damping) * F.coalesce("_c", F.lit(0.0))).alias("pr")))
-        if (i + 1) % 6 == 0 and (i + 1) < iters:
-            pr = pr.localCheckpoint()
+        pr = truncate(pr, i + 1, iters)
     return pr
 
 
@@ -98,17 +96,16 @@ def label_propagation(
     CTEs, like pagerank); isolated vertices keep their own label.
     Per round one (neighbor, label) equi-join + a grouped count + a
     per-vertex top-1 window — all narrow rows; lineage truncated every
-    6 rounds like the sibling iterative operators. The symmetrized
-    edge relation is referenced EVERY round, so it is lazily
-    localCheckpoint-truncated once (one LogicalRDD, computed at first
-    action) instead of re-inlining its union+distinct subtree per
-    round (the r14 shared-subtree discipline from pagerank/harmonic).
-    Returns (id, community)."""
+    ``TRUNCATE_EVERY`` rounds like the sibling iterative operators. The
+    symmetrized edge relation is referenced EVERY round, so it is
+    lazily materialized once instead of re-inlining its union+distinct
+    subtree per round. Returns (id, community)."""
     from pyspark.sql import Window
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .distinct().localCheckpoint(eager=False))
+    sym = materialize(
+        edges.select("src", "dst")
+        .unionByName(edges.select(F.col("dst").alias("src"),
+                                  F.col("src").alias("dst")))
+        .distinct(), eager=False)
     verts = vertices.select("id").distinct()
     lab = verts.select("id", F.col("id").alias("label"))
     for i in range(iters):
@@ -122,8 +119,7 @@ def label_propagation(
                  .select("id", F.col("label").alias("_m")))
         lab = (lab.join(modal, "id", "left")
                .select("id", F.coalesce("_m", "label").alias("label")))
-        if (i + 1) % 6 == 0 and (i + 1) < iters:
-            lab = lab.localCheckpoint()
+        lab = truncate(lab, i + 1, iters)
     return lab.select("id", F.col("label").alias("community"))
 
 
@@ -163,13 +159,12 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     `_oriented_triangles` for the degree-oriented enumeration bound.
     Returns (id, n_triangles), zero rows omitted."""
     # und feeds the degree aggregate (both sides), the rank join and
-    # the wedge-closure join — 4 references; lazy localCheckpoint
-    # truncates it to ONE LogicalRDD computed at first action (k_truss
-    # already checkpoints its per-round edge set for the same reason)
-    und = (edges.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-           .filter(F.col("a") != F.col("b")).distinct()
-           .localCheckpoint(eager=False))
+    # the wedge-closure join — 4 references, so it is lazily
+    # materialized once
+    und = materialize(
+        edges.select(F.least("src", "dst").alias("a"),
+                     F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b")).distinct(), eager=False)
     tri = _oriented_triangles(und)
     corners = F.explode(F.array("p", "q1", "q2")).alias("id")
     return tri.select(corners).groupBy("id").agg(
@@ -190,7 +185,7 @@ def k_truss(
     surviving edge's triangles, drop edges below support k-2, repeat
     until the edge set stops changing. Converges in at most |E|
     rounds, in practice a handful; the surviving edge/support frames
-    are localCheckpoint-truncated per generation and every shuffle
+    are materialized per generation and every shuffle
     carries narrow (id, id) or (edge, count) rows. Aggregation inside
     the loop puts this outside recursive-CTE SQL, but a FIXED round
     count replays it (idempotent at the fixpoint) — same oracle
@@ -218,10 +213,10 @@ def k_truss(
     import logging
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    und = (edges.select(F.least("src", "dst").alias("a"),
-                        F.greatest("src", "dst").alias("b"))
-           .filter(F.col("a") != F.col("b")).distinct()
-           .localCheckpoint())
+    und = materialize(
+        edges.select(F.least("src", "dst").alias("a"),
+                     F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b")).distinct())
     n_before = und.count()
 
     def full_support(cur: DataFrame) -> DataFrame:
@@ -254,10 +249,10 @@ def k_truss(
         it when its exact count is driver-known small; checkpointed
         inputs otherwise carry no size estimate and the planner falls
         back to shuffling the full edge set on every round)."""
-        fan = cand.join(_adj(cur).withColumnRenamed("v", "a"), "a") \
-                  .select("a", "b", F.col("w").alias("c")) \
-                  .filter(F.col("c") != F.col("b")) \
-                  .localCheckpoint(eager=False)
+        fan = materialize(
+            cand.join(_adj(cur).withColumnRenamed("v", "a"), "a")
+            .select("a", "b", F.col("w").alias("c"))
+            .filter(F.col("c") != F.col("b")), eager=False)
         # the wedge fan (|cand| x deg) drives the closure join: its
         # exact count is one cheap map-only job, and a driver-known
         # small fan broadcast turns the closure from a full-edge-set
@@ -284,7 +279,7 @@ def k_truss(
     def _maybe_bcast(df: DataFrame, n: int) -> DataFrame:
         return F.broadcast(df) if n <= bcast_bound else df
 
-    supp = full_support(und).localCheckpoint(eager=False)
+    supp = materialize(full_support(und), eager=False)
     for _ in range(max_iters):
         # keep is a plain filter over the supp checkpoint — giving it
         # its own checkpoint would pay one extra stage materialization
@@ -301,36 +296,35 @@ def k_truss(
             n_removed)
         cur = keep.select("a", "b")
         if n_removed > incremental_threshold * n_before:
-            supp = full_support(cur).localCheckpoint(eager=False)
+            supp = materialize(full_support(cur), eager=False)
         else:
             # triangles of the PRE-peel graph that contain a removed
             # edge mark every edge whose support can have changed
-            fan_r = removed.join(_adj(und).withColumnRenamed("v", "a"),
-                                 "a") \
-                .select("a", "b", F.col("w").alias("c")) \
-                .filter(F.col("c") != F.col("b")) \
-                .localCheckpoint(eager=False)
+            fan_r = materialize(
+                removed.join(_adj(und).withColumnRenamed("v", "a"), "a")
+                .select("a", "b", F.col("w").alias("c"))
+                .filter(F.col("c") != F.col("b")), eager=False)
             # same driver-known-size broadcast as the support fan
             fan_r = _maybe_bcast(fan_r, fan_r.count())
             tri_r = fan_r.join(und.select(F.col("a").alias("x"),
                                           F.col("b").alias("y")),
                                (F.least("b", "c") == F.col("x"))
                                & (F.greatest("b", "c") == F.col("y")))
-            affected = (tri_r.select(F.least("a", "c").alias("a"),
-                                     F.greatest("a", "c").alias("b"))
-                        .unionByName(
-                            tri_r.select(F.least("b", "c").alias("a"),
-                                         F.greatest("b", "c").alias("b")))
-                        .distinct()
-                        # survivors only: removed edges need no support
-                        .join(cur, ["a", "b"], "left_semi")
-                        .localCheckpoint(eager=False))
+            affected = materialize(
+                tri_r.select(F.least("a", "c").alias("a"),
+                             F.greatest("a", "c").alias("b"))
+                .unionByName(
+                    tri_r.select(F.least("b", "c").alias("a"),
+                                 F.greatest("b", "c").alias("b")))
+                .distinct()
+                # survivors only: removed edges need no support
+                .join(cur, ["a", "b"], "left_semi"), eager=False)
             n_aff = affected.count()
             affected = _maybe_bcast(affected, n_aff)
             supp_aff = _common_neighbor_support(affected, cur)
-            supp = (keep.join(affected, ["a", "b"], "left_anti")
-                    .unionByName(supp_aff)
-                    .localCheckpoint(eager=False))
+            supp = materialize(
+                keep.join(affected, ["a", "b"], "left_anti")
+                .unionByName(supp_aff), eager=False)
         und = cur
         n_before = n_after
     logging.getLogger(__name__).warning(
@@ -338,6 +332,18 @@ def k_truss(
         "a superset of the true %d-truss", max_iters, k)
     return supp.select(F.col("a").alias("src"), F.col("b").alias("dst"),
                        "support")
+
+
+def _sym_no_loops(edges: DataFrame, eager: bool = False) -> DataFrame:
+    """Both orientations of every non-loop edge, distinct and
+    materialized: the undirected hop relation the peel and BFS loops
+    re-join every round."""
+    return materialize(
+        edges.select("src", "dst")
+        .unionByName(edges.select(F.col("dst").alias("src"),
+                                  F.col("src").alias("dst")))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct(), eager=eager)
 
 
 def k_core(
@@ -351,28 +357,23 @@ def k_core(
     each peel removes the entire sub-threshold frontier at once).
     Input edges are undirected (src/dst, self-loops ignored). Per
     round one degree aggregate + two semi-joins over narrow (long,
-    long) rows; the surviving edge set is localCheckpoint-truncated
-    per generation like the other iterative operators. Aggregation
-    inside recursion puts this outside recursive-CTE SQL — verified by
-    a pure-Python peel replay (tests/test_pipeline_scale.py).
+    long) rows; the surviving edge set is materialized per generation
+    like the other iterative operators. Aggregation inside recursion
+    puts this outside recursive-CTE SQL — verified by a pure-Python
+    peel replay (tests/test_pipeline_scale.py).
     Returns (id, degree) of the k-core members."""
     import logging
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst"))
-           .distinct()
-           .localCheckpoint())
+    sym = _sym_no_loops(edges, eager=True)
     # one count job per round: the previous round's n_after IS this
     # round's n_before — the initial count is the only extra job
     n_before = sym.count()
     for i in range(max_iters):
         deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
         keep = deg.filter(F.col("_d") >= k).select("src")
-        nxt = (sym.join(keep, "src", "left_semi")
-               .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
-               .select("src", "dst")
-               .localCheckpoint(eager=False))
+        nxt = materialize(
+            sym.join(keep, "src", "left_semi")
+            .join(keep.withColumnRenamed("src", "dst"), "dst", "left_semi")
+            .select("src", "dst"), eager=False)
         n_after = nxt.count()
         sym = nxt
         if n_after == n_before or n_after == 0:
@@ -422,7 +423,7 @@ def hits(
     two single-row aggregates for the norms (Catalyst broadcasts the
     scalar back — no data-sized shuffle). The edge relation is never
     re-shuffled; AQE broadcasts the narrow score frame. Lineage is
-    truncated with a lazy localCheckpoint EVERY round — each round's
+    truncated with a lazy materialization EVERY round — each round's
     frame feeds four consumers, so the sibling operators' every-6
     cadence would let the plan grow ~5.5x per round (see the loop
     comment). Returns (id, authority double, hub double).
@@ -430,12 +431,10 @@ def hits(
     if iters < 1:
         raise ValueError(f"hits needs at least 1 iteration, got {iters}")
     # verts and the edge relation are each referenced TWICE per round
-    # (auth sum + hub sum / their left joins): lazy localCheckpoint
-    # rewrites both to ONE LogicalRDD computed at first action instead
-    # of 2*iters re-inlined scan subtrees (r14 shared-subtree
-    # discipline, same as pagerank/harmonic)
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
+    # (auth sum + hub sum / their left joins): lazily materialized once
+    # instead of 2*iters re-inlined scan subtrees
+    verts = materialize(vertices.select("id").distinct(), eager=False)
+    e = materialize(edges.select("src", "dst"), eager=False)
     hub = verts.select("id", F.lit(1.0).alias("hub"))
     auth = None
     for i in range(iters):
@@ -464,10 +463,10 @@ def hits(
             # sums + two scalar norms), so the un-truncated plan grows
             # ~5.5x PER ROUND (measured: 10 KB -> 14 MB from iters=1 to
             # 5) — the sibling operators' every-6-rounds cadence is far
-            # too late here. A lazy localCheckpoint truncates the plan
+            # too late here. A lazy materialization truncates the plan
             # immediately without scheduling an extra job.
-            hub = hub.localCheckpoint(eager=False)
-            auth = auth.localCheckpoint(eager=False)
+            hub = materialize(hub, eager=False)
+            auth = materialize(auth, eager=False)
     return (auth.withColumnRenamed("auth", "authority")
             .join(hub, "id"))
 
@@ -489,8 +488,8 @@ def personalized_pagerank(
     join chain an external SQL oracle replays exactly.
 
     Per iteration one (id, contribution) shuffle + one join; the
-    restart frame is narrow and broadcast. Lineage truncated every 6
-    rounds. Returns (id, ppr double).
+    restart frame is narrow and broadcast. Lineage truncated every
+    ``TRUNCATE_EVERY`` rounds. Returns (id, ppr double).
 
     ``sources`` ids absent from ``vertices`` are dropped BEFORE |S| is
     counted: an out-of-graph seed can never receive restart mass, so
@@ -513,21 +512,19 @@ def personalized_pagerank(
             .cast("double")).otherwise(F.col("_ns0")).alias("_ns"))
     # restart (with its |S| raise-guard subplan) and the
     # degree-annotated edge relation are referenced every iteration:
-    # lazy localCheckpoint truncates each to ONE LogicalRDD computed
-    # at first action instead of re-inlining the distinct+semi-join+
-    # guard and scan+degree-join subtrees per round (the r14
-    # shared-subtree discipline pagerank already applies)
-    restart = (verts
-               .join(src_set.withColumn("_is_src", F.lit(1)), "id", "left")
-               .crossJoin(F.broadcast(n_src))
-               .select("id", F.when(F.col("_is_src").isNotNull(),
-                                    F.lit(1.0) / F.col("_ns"))
-                       .otherwise(F.lit(0.0)).alias("restart"))
-               .localCheckpoint(eager=False))
+    # lazily materialized once instead of re-inlining the distinct+
+    # semi-join+guard and scan+degree-join subtrees per round
+    restart = materialize(
+        verts
+        .join(src_set.withColumn("_is_src", F.lit(1)), "id", "left")
+        .crossJoin(F.broadcast(n_src))
+        .select("id", F.when(F.col("_is_src").isNotNull(),
+                             F.lit(1.0) / F.col("_ns"))
+                .otherwise(F.lit(0.0)).alias("restart")), eager=False)
     deg = edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("_deg"))
-    ed = edges.join(deg.withColumnRenamed("id", "src"), "src") \
-        .localCheckpoint(eager=False)
+    ed = materialize(edges.join(deg.withColumnRenamed("id", "src"), "src"),
+                     eager=False)
     pr = restart.select("id", F.col("restart").alias("ppr"))
     for i in range(iters):
         contrib = (ed.join(pr.withColumnRenamed("id", "src")
@@ -539,8 +536,7 @@ def personalized_pagerank(
                       (F.lit(1.0 - damping) * F.col("restart")
                        + F.lit(damping) * F.coalesce("_c", F.lit(0.0))
                        ).alias("ppr")))
-        if (i + 1) % 6 == 0 and (i + 1) < iters:
-            pr = pr.localCheckpoint()
+        pr = truncate(pr, i + 1, iters)
     return pr
 
 
@@ -569,11 +565,10 @@ def random_walks(
     raw vertex ids so downstream corpus generation (node2vec-style
     sequence emission) never re-parses ids from text."""
     from pyspark.sql import Window
-    # the edge relation is re-joined every step: lazy localCheckpoint
-    # truncates it to ONE LogicalRDD computed at first action instead
-    # of `steps` re-inlined scans (r14 shared-subtree discipline)
-    hop = edges.select(F.col("src").alias("cur"), "dst") \
-        .localCheckpoint(eager=False)
+    # the edge relation is re-joined every step: lazily materialized
+    # once instead of `steps` re-inlined scans
+    hop = materialize(edges.select(F.col("src").alias("cur"), "dst"),
+                      eager=False)
     w = starts.select(F.col("id").alias("walk_id"),
                       F.col("id").alias("cur"),
                       F.col("id").cast("string").alias("path"),
@@ -596,10 +591,24 @@ def random_walks(
                      F.when(moved,
                             F.concat(F.col("path_ids"), F.array(F.col("dst"))))
                      .otherwise(F.col("path_ids")).alias("path_ids")))
-        if (s + 1) % 6 == 0 and (s + 1) < steps:
-            w = w.localCheckpoint()
+        w = truncate(w, s + 1, steps)
     return w.select("walk_id", F.col("cur").alias("final"), "path",
                     "path_ids")
+
+
+def _sym_verts_srcs(
+    edges: DataFrame,
+    vertices: DataFrame,
+    sources: DataFrame,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The lazily materialized shared subtrees of the sampled-source
+    centralities: hop relation, vertex universe, and the sources that
+    are vertices."""
+    sym = _sym_no_loops(edges)
+    verts = materialize(vertices.select("id").distinct(), eager=False)
+    srcs = materialize(sources.select("id").distinct()
+                       .join(verts, "id", "left_semi"), eager=False)
+    return sym, verts, srcs
 
 
 def harmonic_centrality(
@@ -623,18 +632,11 @@ def harmonic_centrality(
     set + a distinct — all on narrow id-pair rows, the same
     generational discipline as the VLE/BFS operators. The symmetrized
     edge relation and vertex universe are referenced every hop /
-    twice, so both are lazily localCheckpoint-truncated once (ONE
-    LogicalRDD each, computed at first action — the r14
-    shared-subtree discipline harmonic_centrality_sampled measured at
-    68-scans-to-0). Returns
+    twice, so both are lazily materialized once. Returns
     (id, n_reached long, harmonic double) for every vertex (zeros for
     isolated ones)."""
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst"))
-           .distinct().localCheckpoint(eager=False))
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
+    sym = _sym_no_loops(edges)
+    verts = materialize(vertices.select("id").distinct(), eager=False)
     dist = verts.select(F.col("id").alias("u"), F.col("id").alias("v"),
                         F.lit(0).alias("d"))
     frontier = dist
@@ -647,9 +649,9 @@ def harmonic_centrality(
         if h < max_hops:
             # each frontier feeds the union AND the next expansion AND
             # the next anti-join: un-truncated, the plan grows ~3x per
-            # hop (measured 2.4 KB -> 74 KB from hop 1 to 4). Lazy
-            # localCheckpoint keeps it linear with no extra job.
-            nxt = nxt.localCheckpoint(eager=False)
+            # hop (measured 2.4 KB -> 74 KB from hop 1 to 4). A lazy
+            # materialization keeps it linear with no extra job.
+            nxt = materialize(nxt, eager=False)
         dist = dist.unionByName(nxt)
         frontier = nxt
     reached = (dist.filter(F.col("d") > 0)
@@ -690,24 +692,12 @@ def harmonic_centrality_sampled(
     harmonic_est double) for every vertex — n_sampled is the RAW count
     of seeds that reached the vertex (the estimator's support, useful
     for confidence filtering), harmonic_est the scaled estimate."""
-    # r14: the shared subtrees (symmetrized edges, vertex universe,
-    # seed semi-join) are lazily truncated too — each is referenced by
-    # every hop (sym) or by two consumers (verts: universe + |V|;
-    # srcs: level 0 + |S|), and un-truncated they re-inline their
-    # union/distinct trees per reference (the harmonic plan carried 68
-    # parquet scans; driver-side analysis alone cost ~1.1s per build).
-    # Lazy localCheckpoint rewrites each to ONE LogicalRDD computed
-    # once at the first action — no extra job, same values.
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst"))
-           .distinct()
-           .localCheckpoint(eager=False))
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    srcs = (sources.select("id").distinct()
-            .join(verts, "id", "left_semi")
-            .localCheckpoint(eager=False))
+    # the shared subtrees (symmetrized edges, vertex universe, seed
+    # semi-join) are each referenced by every hop (sym) or by two
+    # consumers (verts: universe + |V|; srcs: level 0 + |S|), so each
+    # is lazily materialized once; un-truncated, the plan carried 68
+    # parquet scans and ~1.1 s of driver-side analysis per build
+    sym, verts, srcs = _sym_verts_srcs(edges, vertices, sources)
     dist = srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
                        F.lit(0).alias("d"))
     frontier = dist
@@ -720,7 +710,7 @@ def harmonic_centrality_sampled(
         if h < max_hops:
             # same per-hop lazy truncation as the exhaustive form: the
             # frontier feeds union + expansion + anti-join every hop
-            nxt = nxt.localCheckpoint(eager=False)
+            nxt = materialize(nxt, eager=False)
         dist = dist.unionByName(nxt)
         frontier = nxt
     # |V| and |S| folded declaratively (two single-row aggregates,
@@ -770,9 +760,8 @@ def _min_reach_labels_fb(
     round/job count halves the phase (r14 opt session 2: graph_scc
     31.9s -> see OPTIMIZATION_r14.md).
 
-    Each round lazily localCheckpoints so the convergence count
-    materializes the generation in one job and the plan stays
-    constant-size.
+    Each round lazily materializes its generation, so the convergence
+    count stores it in the same job and the plan stays constant-size.
 
     Deliberately NO pointer-jump doubling (unlike
     pipeline/dedup.connected_components): jumping here means
@@ -791,8 +780,8 @@ def _min_reach_labels_fb(
     join-agg branches, not a deeper chain.)
 
     Returns (id, f, b)."""
-    lab = vertices.select("id", F.col("id").alias("f"),
-                          F.col("id").alias("b")).localCheckpoint()
+    lab = materialize(vertices.select("id", F.col("id").alias("f"),
+                                      F.col("id").alias("b")))
     for _ in range(max_iters):
         nf = (edges
               .join(lab.select(F.col("id").alias("src"),
@@ -804,12 +793,12 @@ def _min_reach_labels_fb(
                                F.col("b").alias("_lb")), "dst")
               .groupBy(F.col("src").alias("id"))
               .agg(F.min("_lb").alias("_mb")))
-        new = (lab.join(nf, "id", "left").join(nb, "id", "left")
-               .select("id",
-                       F.col("f").alias("_of"), F.col("b").alias("_ob"),
-                       F.least("f", "_mf").alias("f"),
-                       F.least("b", "_mb").alias("b"))
-               .localCheckpoint(eager=False))
+        new = materialize(
+            lab.join(nf, "id", "left").join(nb, "id", "left")
+            .select("id",
+                    F.col("f").alias("_of"), F.col("b").alias("_ob"),
+                    F.least("f", "_mf").alias("f"),
+                    F.least("b", "_mb").alias("b")), eager=False)
         changed = new.filter((F.col("f") != F.col("_of"))
                              | (F.col("b") != F.col("_ob"))).count()
         lab = new.select("id", "f", "b")
@@ -887,6 +876,15 @@ def _tarjan_scc(edge_rows) -> dict:
     return comp
 
 
+def _active_edges(act_e: DataFrame, act_v: DataFrame) -> DataFrame:
+    """The edges of ``act_e`` with both endpoints in ``act_v``, lazily
+    materialized (SCC's next active edge generation)."""
+    return materialize(
+        act_e.join(act_v.withColumnRenamed("id", "src"), "src", "left_semi")
+        .join(act_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
+        .select("src", "dst"), eager=False)
+
+
 def strongly_connected_components(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -922,7 +920,7 @@ def strongly_connected_components(
 
     Scale shape: every step is a narrow (id, id) equi-join or
     aggregate; the active vertex/edge frames shrink monotonically and
-    are localCheckpoint-truncated per round, so the plan never grows.
+    are materialized per round, so the plan never grows.
     Worst case is a condensation chain ordered adversarially against
     the ids (one SCC settles per round, like every min-pivot FW-BW
     variant); hitting ``max_rounds`` raises loudly — a partial SCC
@@ -978,8 +976,8 @@ def strongly_connected_components(
              .unionByName(e.select(F.col("dst").alias("id"))))
     if vertices is not None:
         verts = verts.unionByName(vertices.select("id"))
-    act_v = verts.distinct().localCheckpoint()
-    act_e = e.localCheckpoint()
+    act_v = materialize(verts.distinct())
+    act_e = materialize(e)
     parts: list[DataFrame] = []
     n_act = act_v.count()
     for _ in range(max_rounds):
@@ -990,10 +988,10 @@ def strongly_connected_components(
         while True:
             srcs = act_e.select(F.col("src").alias("id")).distinct()
             dsts = act_e.select(F.col("dst").alias("id")).distinct()
-            triv = (act_v.join(srcs, "id", "left_anti")
-                    .unionByName(act_v.join(dsts, "id", "left_anti"))
-                    .distinct()
-                    .localCheckpoint(eager=False))
+            triv = materialize(
+                act_v.join(srcs, "id", "left_anti")
+                .unionByName(act_v.join(dsts, "id", "left_anti"))
+                .distinct(), eager=False)
             n_triv = triv.count()
             if n_triv == 0:
                 break
@@ -1001,14 +999,9 @@ def strongly_connected_components(
             # lazy generations: the NEXT iteration's triv count (or the
             # settle phase's first job) materializes both in one job —
             # eager checkpoints here cost two extra jobs per peel
-            act_v = (act_v.join(triv, "id", "left_anti")
-                     .localCheckpoint(eager=False))
-            act_e = (act_e
-                     .join(act_v.withColumnRenamed("id", "src"),
-                           "src", "left_semi")
-                     .join(act_v.withColumnRenamed("id", "dst"),
-                           "dst", "left_semi")
-                     .select("src", "dst").localCheckpoint(eager=False))
+            act_v = materialize(act_v.join(triv, "id", "left_anti"),
+                                eager=False)
+            act_e = _active_edges(act_e, act_v)
             n_act -= n_triv
         if n_act == 0:
             break
@@ -1017,15 +1010,13 @@ def strongly_connected_components(
         fb = (_min_reach_labels_fb(act_e, act_v, max_iters)
               .select("id", F.col("f").alias("_f"), F.col("b").alias("_b")))
         settled = fb.filter(F.col("_f") == F.col("_b"))
-        parts.append(settled.select("id", F.col("_f").alias("component"))
-                     .localCheckpoint(eager=False))
-        act_v = (fb.filter(F.col("_f") != F.col("_b"))
-                 .select("id").localCheckpoint(eager=False))
+        parts.append(materialize(
+            settled.select("id", F.col("_f").alias("component")),
+            eager=False))
+        act_v = materialize(fb.filter(F.col("_f") != F.col("_b"))
+                            .select("id"), eager=False)
         n_act = act_v.count()   # materializes fb + act_v in one job
-        act_e = (act_e
-                 .join(act_v.withColumnRenamed("id", "src"), "src", "left_semi")
-                 .join(act_v.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                 .select("src", "dst").localCheckpoint(eager=False))
+        act_e = _active_edges(act_e, act_v)
     if n_act != 0:
         raise RuntimeError(
             "strongly_connected_components: active vertices remain after "
@@ -1079,17 +1070,8 @@ def betweenness_centrality_sampled(
         raise ValueError(f"max_hops must be >= 1, got {max_hops}")
     # sym is joined once per forward hop AND once per backward level,
     # verts/srcs feed the seed levels and the |V|/|S| scale factors:
-    # lazy localCheckpoint truncates each shared subtree to ONE
-    # LogicalRDD computed at first action (the r14 shared-subtree
-    # discipline measured on harmonic_centrality_sampled)
-    sym = (edges.select("src", "dst")
-           .unionByName(edges.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-           .filter(F.col("src") != F.col("dst"))
-           .distinct().localCheckpoint(eager=False))
-    verts = vertices.select("id").distinct().localCheckpoint(eager=False)
-    srcs = (sources.select("id").distinct().join(verts, "id", "left_semi")
-            .localCheckpoint(eager=False))
+    # each shared subtree is lazily materialized once
+    sym, verts, srcs = _sym_verts_srcs(edges, vertices, sources)
     levels = [srcs.select(F.col("id").alias("s"), F.col("id").alias("v"),
                           F.lit(1.0).alias("sigma"))]
     seen = levels[0].select("s", "v")
@@ -1100,7 +1082,7 @@ def betweenness_centrality_sampled(
                 .agg(F.sum("sigma").alias("sigma")))
         nxt = cand.join(seen, ["s", "v"], "left_anti")
         if h < max_hops:
-            nxt = nxt.localCheckpoint(eager=False)
+            nxt = materialize(nxt, eager=False)
         levels.append(nxt)
         seen = seen.unionByName(nxt.select("s", "v"))
     # backward dependency accumulation, rim inward; delta at the rim
@@ -1124,7 +1106,7 @@ def betweenness_centrality_sampled(
                      .select("s", "v", "sigma",
                              F.coalesce("_d", F.lit(0.0)).alias("delta")))
         if h > 0:
-            deltas[h] = deltas[h].localCheckpoint(eager=False)
+            deltas[h] = materialize(deltas[h], eager=False)
     acc = deltas[1]
     for h in range(2, max_hops + 1):
         acc = acc.unionByName(deltas[h])

@@ -14,8 +14,8 @@ DataFrame analog of the reference's per-path visited set.
 Scale notes:
 - the edge relation is pinned for the duration of the loop and
   released on exit;
-- path-array columns grow O(depth); lineage is cut with
-  ``localCheckpoint`` every ``checkpoint_every`` hops;
+- path-array columns grow O(depth); VLE cuts lineage every
+  ``iterate.TRUNCATE_EVERY`` hops;
 - frontiers are pruned per hop (shortest-path keeps only the cheapest
   row per (seed, vertex)), so frontier size is bounded by reachable
   vertices, not path count;
@@ -25,11 +25,10 @@ Scale notes:
   Retired generations can in principle be needed again if a healthy
   executor drops a MEMORY_AND_DISK block of the live generation — that
   does not happen short of executor loss, which already invalidates
-  ``localCheckpoint`` lineage (its documented tradeoff). Production
-  deployments that must survive executor loss set the engine conf
-  ``spark.agensgraph.checkpointDir`` to a reliable (HDFS/object-store)
-  path: every iterative operator then truncates lineage with reliable
-  ``DataFrame.checkpoint`` instead (see ``_ckpt``).
+  ``localCheckpoint`` lineage. Generations are materialized, pinned
+  and released through ``operators/iterate.py``, which owns that
+  tradeoff and the reliable-checkpoint opt-in
+  (``spark.agensgraph.checkpointDir``).
 
 Edge input convention: a DataFrame with columns
 ``src, dst, eid`` (+ ``w`` for Dijkstra) — already direction-normalized
@@ -44,76 +43,17 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from agensgraph_spark.operators.iterate import (
+    TRUNCATE_EVERY, materialize, pin_edges, release)
+
 log = logging.getLogger(__name__)
 
 DEFAULT_MAX_HOPS = 12
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Generation materialization with lineage truncation. Default:
-    ``localCheckpoint`` — fastest, but blocks live on executors and do
-    NOT survive executor loss (module docstring tradeoff). Production
-    opt-in: set the engine conf ``spark.agensgraph.checkpointDir`` to
-    a reliable (HDFS / object-store) path and EVERY iterative path
-    operator switches to reliable ``DataFrame.checkpoint`` — state
-    survives executor loss at the cost of one write+read per
-    generation. The SparkContext checkpoint dir is adopted from the
-    conf lazily; an explicitly pre-set ``setCheckpointDir`` is
-    respected."""
-    spark = df.sparkSession
-    try:
-        d = spark.conf.get("spark.agensgraph.checkpointDir", "")
-    except Exception:  # pragma: no cover - conf service unavailable
-        d = ""
-    if d:
-        sc = spark.sparkContext
-        if sc.getCheckpointDir() is None:
-            sc.setCheckpointDir(d)
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
-
-
-def _maybe_checkpoint(df: DataFrame, k: int, every: int | None) -> DataFrame:
-    if every and k % every == 0:
-        return _ckpt(df)
-    return df
-
-
-BROADCAST_EDGE_LIMIT = 200_000
 BROADCAST_FRONTIER_LIMIT = 100_000
-
-
-def _pin_edges(edges: DataFrame) -> tuple[DataFrame, bool]:
-    """Persist the edge relation: every hop re-joins it, and each
-    iteration's isEmpty/cache action would otherwise re-run the whole
-    scan lineage (label unions, graphid arithmetic) once per hop.
-    MEMORY_AND_DISK so oversized edge sets spill instead of OOM.
-
-    Returns (edges, small): when the persisted relation is small the
-    caller broadcasts it into every hop join — the frontier then never
-    shuffles on the join key, collapsing each hop to one narrow stage.
-    (Counting is ~free: it is the action that materializes the
-    persist.)"""
-    from pyspark import StorageLevel
-    edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    return edges, edges.count() <= BROADCAST_EDGE_LIMIT
 
 
 def _hop_side(edges: DataFrame, small: bool) -> DataFrame:
     return F.broadcast(edges) if small else edges
-
-
-def _unpersist(*dfs: DataFrame | None) -> None:
-    """Retire superseded cached generations (non-blocking). Safe on
-    frames that were never persisted; localCheckpoint storage is
-    RDD-level (not in the CacheManager) and is reclaimed by the
-    ContextCleaner once the superseded frame is unreferenced."""
-    for df in dfs:
-        if df is not None:
-            try:
-                df.unpersist(blocking=False)
-            except Exception:  # pragma: no cover - defensive
-                pass
 
 
 def vle_expand(
@@ -122,7 +62,6 @@ def vle_expand(
     min_hops: int,
     max_hops: int | None,
     unique_edges: bool = True,
-    checkpoint_every: int | None = 6,
 ) -> DataFrame:
     """Variable-length edge expansion ``[:T*min..max]``.
 
@@ -133,8 +72,8 @@ def vle_expand(
     pair each seed with itself and empty arrays.
 
     When the edge relation is pinned (max_hops > 3), the result is
-    materialized once (localCheckpoint) before returning so the pin can
-    be released — the returned frame holds the expansion and no longer
+    materialized once before returning so the pin can be released —
+    the returned frame holds the expansion and no longer
     references the edge relation. r14: depth <= 3 expansions skip the
     pin entirely — up to three raw scans of the edge lineage are
     cheaper than a materialize+count+checkpoint cycle (the same trade
@@ -155,7 +94,7 @@ def vle_expand(
     small = False
     pinned = max_hops > 3
     if pinned:
-        edges, small = _pin_edges(edges)
+        edges, small = pin_edges(edges)
 
     frontier = seeds.select(
         F.col("seed"),
@@ -174,7 +113,7 @@ def vle_expand(
     # materializes the edge shuffle's map side before flipping to
     # broadcast (the dijkstra r12 finding; at cluster scale that is a
     # full shuffle write of the edge relation). Later rounds' frontiers
-    # are lazy (checkpointed only every `checkpoint_every`), so their
+    # are lazy (checkpointed only every TRUNCATE_EVERY hops), so their
     # sizes are unknown between checkpoints and AQE keeps the decision.
     fcount: int | None = None
     if pinned and not small:
@@ -196,9 +135,9 @@ def vle_expand(
             F.lit(k).cast("long").alias("len"),
         )
         fcount = None
-        frontier = _maybe_checkpoint(frontier, k, checkpoint_every)
-        if checkpoint_every and k % checkpoint_every == 0:
-            # the frame is materialized — the count reads stored blocks
+        if k % TRUNCATE_EVERY == 0:
+            # the count reads the materialized blocks
+            frontier = materialize(frontier)
             fcount = frontier.count()
         if k >= min_hops:
             results.append(frontier.select("seed", F.col("cur").alias("dst"), "eids", "vids", "len"))
@@ -221,8 +160,8 @@ def vle_expand(
         out = out.coalesce(2 * spread)
         # materialize the expansion once, then release the edge pin:
         # the checkpointed result no longer references the relation
-        out = _ckpt(out)
-        _unpersist(edges)
+        out = materialize(out)
+        release(edges)
     return out
 
 
@@ -242,7 +181,7 @@ def bfs_shortest(
     SHORTESTPATH), True keeps every shortest path (ALLSHORTESTPATHS).
 
     Every generation (frontier / visited / accumulated hits) is an
-    eagerly localCheckpointed frame: each round's plan references only
+    eagerly materialized frame: each round's plan references only
     materialized RDDs, never the recurrence history. Without this the
     logical tree grows Fibonacci-fashion (frontier_k references paths
     of BOTH prior generations) and analysis + recompute go exponential
@@ -257,7 +196,7 @@ def bfs_shortest(
         # per hop dominate when the hop budget is this small; path
         # blowup is bounded by E^3)
         return _bfs_shortest_shallow(edges, pairs, min_hops, max_hops, all_paths)
-    edges, small = _pin_edges(edges)
+    edges, small = pin_edges(edges)
     pairs = pairs.select("seed", "target").distinct().cache()
     pairs_pin = pairs  # unpersist handle (pairs may be narrowed below)
 
@@ -274,7 +213,7 @@ def bfs_shortest(
             F.lit(0).cast("long").alias("len"))
         # narrow via anti-join, NOT filter(seed != target): a filter
         # constraint propagates through the loop's hit joins (even
-        # across localCheckpoint, which preserves constraints) and
+        # across a checkpoint, which preserves constraints) and
         # Spark's UnionBase.rewriteConstraints crashes on attributes
         # the hit projection dropped; anti-join output carries only the
         # left child's constraints
@@ -289,7 +228,7 @@ def bfs_shortest(
         F.array().cast("array<long>").alias("vids"),
         F.lit(0).cast("long").alias("len"),
     )
-    frontier = _ckpt(frontier)
+    frontier = materialize(frontier)
     # every generation is eagerly checkpointed, so the per-round count
     # reads materialized blocks (~ms) — it powers BOTH the drain probe
     # (replacing isEmpty) and the broadcast hint that keeps the pinned
@@ -320,11 +259,11 @@ def bfs_shortest(
             # one representative path per (seed, vertex)
             w = Window.partitionBy("seed", "cur").orderBy(F.col("eids").getItem(0))
             nxt = nxt.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
-        frontier = _ckpt(nxt)
+        frontier = materialize(nxt)
         # visited checkpoints per round: a lazy union would re-run every
         # prior generation's distinct in each round's anti-join (O(k²)
         # shuffles); the narrow (seed, cur) checkpoint is one small job
-        visited = _ckpt(
+        visited = materialize(
             visited.unionByName(frontier.select("seed", "cur").distinct()))
 
         # this round's hits join the full (cached, small) pair set: BFS
@@ -364,8 +303,8 @@ def bfs_shortest(
         # re-derive pairs' distinct from raw lineage on every final
         # evaluation (and diverge if the caller's frame is
         # non-deterministic)
-        found = _ckpt(found)
-    _unpersist(pairs_pin, edges)
+        found = materialize(found)
+    release(pairs_pin, edges)
     if found is None or not found.take(1):
         return pairs.limit(0).select(
             F.col("seed"), F.col("target"),
@@ -435,7 +374,7 @@ def dijkstra_paths(
     a pure cache() scheme). But truncation costs one eager job per
     frame, which shows up on the common 1-3 round searches. So rounds
     1-3 run the cheap cache() scheme (tree depth ≤3 is harmless) and
-    from round 4 every generation is an eagerly localCheckpointed
+    from round 4 every generation is an eagerly materialized
     frame (flat plan, O(1) live state); the early cached generations
     are retired as soon as the first checkpoint truncates the lineage,
     and at exit only the final generation stays pinned.
@@ -474,7 +413,7 @@ def dijkstra_paths(
         F.lit(0).cast("long").alias("len"),
         F.lit(0.0).alias("weight"),
     )
-    paths = _ckpt(paths)
+    paths = materialize(paths)
     frontier = paths
     # seed count: paths is ALREADY eagerly checkpointed, so this count
     # reads materialized blocks (~ms) — and knowing it up front lets
@@ -493,7 +432,7 @@ def dijkstra_paths(
         # two raw scans (hop 1 + hop 2's drain probe) are cheaper than
         # an eager materialize+count, so pinning starts at depth 3
         if k == 3 and not pinned:
-            edges, small = _pin_edges(edges)
+            edges, small = pin_edges(edges)
             pinned = True
         # whichever side is small drives the join strategy: tiny
         # frontier against a big edge relation → broadcast the frontier
@@ -517,7 +456,7 @@ def dijkstra_paths(
             # count read it once, cache the new generation lazily
             step = step.persist()
             if step.isEmpty():
-                _unpersist(step)
+                release(step)
                 fcount = 0
                 break
             early_gens.append(step)
@@ -539,18 +478,18 @@ def dijkstra_paths(
         else:
             # one checkpoint job materializes the whole round (hop join
             # + rank); the anti-join then reads stored blocks only
-            new_paths = _ckpt(new_paths)
+            new_paths = materialize(new_paths)
             new_frontier = new_paths.join(
                 paths.select("seed", "cur", "eids"),
                 ["seed", "cur", "eids"], "left_anti",
             )
-            new_frontier = _ckpt(new_frontier)
+            new_frontier = materialize(new_frontier)
         fcount = new_frontier.count()
         paths, frontier = new_paths, new_frontier
         if k >= cp_from and early_gens:
             # lineage is truncated at this round's checkpoints — the
             # cache()-era generations can no longer be re-referenced
-            _unpersist(*early_gens)
+            release(*early_gens)
             early_gens = []
         if fcount == 0:
             break
@@ -576,9 +515,9 @@ def dijkstra_paths(
     # rounds); retire every superseded early generation and the loop's
     # remaining pins (the pair set re-derives from the caller's frame
     # in one small shuffle if the lazy result is consumed later)
-    _unpersist(*[g for g in early_gens if g is not paths])
+    release(*[g for g in early_gens if g is not paths])
     if pairs is not None:
-        _unpersist(pairs)
+        release(pairs)
     if pinned:
-        _unpersist(edges)
+        release(edges)
     return out

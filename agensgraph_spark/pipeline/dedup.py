@@ -21,6 +21,8 @@ import threading
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
+from agensgraph_spark.operators.iterate import materialize, release
+
 log = logging.getLogger(__name__)
 
 
@@ -277,11 +279,10 @@ def minhash_lsh_candidates(
     threshold so exact verification only runs on plausible pairs.
 
     Executes EAGERLY: the candidate set is materialized at call time
-    (localCheckpoint) so the intermediate signature pin can be
-    released instead of leaking for the session. Pass ``min_est``
-    rather than composing a post-hoc filter, and note localCheckpoint
-    storage does not survive executor loss (see README's fault-model
-    note)."""
+    (``iterate.materialize``, which also carries the fault model) so
+    the intermediate signature pin can be released instead of leaking
+    for the session. Pass ``min_est`` rather than composing a post-hoc
+    filter."""
     sig = minhash_signatures(df, text_col, id_col, num_hashes, k, hash_fn) \
         .select("_id", F.array(*[f"h{i}" for i in range(num_hashes)]).alias("_sig"))
     pins: list[DataFrame] = []
@@ -289,11 +290,9 @@ def minhash_lsh_candidates(
                                 max_bucket, audit_cap, hash_fn, pins)
     # the candidate set is bounded (near-dups are rare at corpus
     # scale): materialize it eagerly so the intermediate signature pin
-    # can be released instead of leaking for the session (paths.py's
-    # pin discipline)
-    out = out.localCheckpoint()
-    for p in pins:
-        p.unpersist(blocking=False)
+    # can be released instead of leaking for the session
+    out = materialize(out)
+    release(*pins)
     return out
 
 
@@ -446,7 +445,7 @@ def minhash_neardup_pairs(
     most documents (re-hashing would be a full pass anyway); wrong at
     sparse-candidate corpus scale, so the default stays False.
 
-    Executes EAGERLY (localCheckpoint at return) so every pinned
+    Executes EAGERLY (materialized at return) so every pinned
     intermediate is released at call time — narrow the output with
     ``min_est``/``threshold``, not post-hoc filters."""
     spread = docs.sparkSession.sparkContext.defaultParallelism
@@ -499,9 +498,8 @@ def minhash_neardup_pairs(
             .filter(F.col("jaccard") >= threshold))
     # near-dup output is bounded; materialize and release every pin so
     # repeated invocations don't accumulate pinned storage
-    out = out.localCheckpoint()
-    for p in pins:
-        p.unpersist(blocking=False)
+    out = materialize(out)
+    release(*pins)
     return out
 
 
@@ -720,7 +718,7 @@ def simhash_neardup_pairs(
     Banding (pigeonhole: two hashes within k bits agree exactly on at
     least one of k+1 bands) turns the quadratic scan into a bucket
     join; the hamming check is one JVM-side bit_count(xor).
-    Executes EAGERLY (localCheckpoint at return) so the signature pin
+    Executes EAGERLY (materialized at return) so the signature pin
     is released at call time — narrow via ``max_hamming``, not
     post-hoc filters."""
     sig = simhash(df, text_col, id_col, bits, hash_fn).persist()
@@ -739,8 +737,8 @@ def simhash_neardup_pairs(
              .select("id_a", "id_b",
                      F.bit_count(F.col("ha").bitwiseXOR(F.col("hb"))).alias("hamming"))
              .distinct())
-    out = pairs.filter(F.col("hamming") <= max_hamming).localCheckpoint()
-    sig.unpersist(blocking=False)
+    out = materialize(pairs.filter(F.col("hamming") <= max_hamming))
+    release(sig)
     return out
 
 
@@ -853,15 +851,14 @@ def connected_components(
     O(component diameter) rounds — near-dup clusters are dense and
     shallow, so a handful of rounds closes them. Per round: one
     edge-to-label equi-join + min aggregate (both shuffles on narrow
-    (long, long) rows) and a driver-side convergence count, the same
-    iterate-persist-unpersist generational pattern as the path
-    operators (operators/paths.py): the previous generation is
-    unpersisted as soon as the next materializes, so at most two label
-    frames are ever pinned. On the distributed path the symmetric edge
-    list is persisted for the loop and released before returning, and
-    the returned frame is localCheckpoint-materialized so it holds no
-    reference to the pins; the driver fast path returns a lazy frame
-    built purely from the driver-side label map.
+    (long, long) rows) and a driver-side convergence count, the
+    generational pattern of ``operators/iterate.py``: each round
+    materializes the next label frame and the superseded one is freed.
+    On the distributed path the symmetric edge list is persisted for
+    the loop and released before returning, and the returned frame is
+    materialized so it holds no reference to the pins; the driver fast
+    path returns a lazy frame built purely from the driver-side label
+    map.
 
     ``nodes`` (optional, single id column) widens the universe:
     unpaired ids come back as singleton components of themselves.
@@ -898,7 +895,7 @@ def connected_components(
     # limit(k+1).count() short-circuits as soon as k+1 rows exist and
     # returns exactly min(|pairs|, k+1), so the regime decision is
     # unchanged. Callers hand in already-materialized pair frames
-    # (minhash/exact dedup outputs localCheckpoint eagerly), so the
+    # (minhash/exact dedup outputs are materialized eagerly), so the
     # probe and the fast path's collect never recompute a heavy plan.
     raw = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # fused probe+fetch (r15): limit(k+1).collect() ships at most k+1
@@ -962,14 +959,13 @@ def connected_components(
     base = edges.select(F.col("src").alias("id")).distinct()
     if nodes is not None:
         base = base.unionByName(nodes.toDF("id")).distinct()
-    # localCheckpoint (eager), not persist: the label frame feeds the
+    # materialized (eager), not persisted: the label frame feeds the
     # next generation TWICE (propagation join + label update), so an
     # un-truncated lineage doubles every round and the analyzer blows
     # up long before the executors do — checkpointing pins a
-    # generation-sized RDD and keeps the plan constant-size (same
-    # pattern as operators/paths.py)
-    lab = (base.repartition(width, "id")
-           .select("id", F.col("id").alias("component")).localCheckpoint())
+    # generation-sized RDD and keeps the plan constant-size
+    lab = materialize(base.repartition(width, "id")
+                      .select("id", F.col("id").alias("component")))
     converged = False
     for _ in range(max_iters):
         # one min-label step + one pointer jump per materialized round
@@ -992,14 +988,15 @@ def connected_components(
         # full round per link.
         jump = stepped.select(F.col("id").alias("_jid"),
                               F.col("component").alias("_jc"))
-        # LAZY localCheckpoint: the convergence count below is the
-        # round's first action, so it materializes the checkpoint AND
-        # counts in ONE job — an eager checkpoint would pay a separate
-        # job per round just to follow it with the count
-        new = (stepped.join(jump, stepped.component == jump._jid, "left")
-               .select("id", "_old",
-                       F.least("component", "_jc").alias("component"))
-               .localCheckpoint(eager=False))
+        # LAZY: the convergence count below is the round's first
+        # action, so it materializes the checkpoint AND counts in ONE
+        # job — an eager checkpoint would pay a separate job per round
+        # just to follow it with the count
+        new = materialize(
+            stepped.join(jump, stepped.component == jump._jid, "left")
+            .select("id", "_old",
+                    F.least("component", "_jc").alias("component")),
+            eager=False)
         changed = new.filter(F.col("component") != F.col("_old")).count()
         lab = new  # superseded checkpoint storage is freed on GC
         if changed == 0:
@@ -1010,8 +1007,8 @@ def connected_components(
             "connected_components: max_iters=%d reached before "
             "convergence — labels of very long chains may not be fully "
             "propagated", max_iters)
-    out = lab.select("id", "component").localCheckpoint()
-    edges.unpersist(blocking=False)
+    out = materialize(lab.select("id", "component"))
+    release(edges)
     return out
 
 

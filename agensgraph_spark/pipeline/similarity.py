@@ -18,6 +18,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from agensgraph_spark.operators.iterate import materialize
 from agensgraph_spark.pipeline.dedup import _warn_async
 from agensgraph_spark.pipeline.util import maybe_broadcast
 
@@ -840,7 +841,7 @@ def neighbor_mean_embeddings(
             # truncate lineage between rounds (same rationale as the
             # other iterative operators; a couple of rounds is typical,
             # so eager checkpoints stay cheap)
-            cur = cur.localCheckpoint()
+            cur = materialize(cur)
     return cur.select(F.col("d").alias(id_col), F.col("_v").alias("embedding"))
 
 

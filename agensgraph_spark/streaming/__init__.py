@@ -3,4 +3,5 @@ from agensgraph_spark.streaming.ingest import (  # noqa: F401
     stream_dedup,
     windowed_event_counts,
     stream_append_label,
+    drain_to_memory,
 )

@@ -109,3 +109,28 @@ def stream_append_label(
             .option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start())
+
+
+
+def drain_to_memory(df: DataFrame, name: str, mode: str,
+                    timeout_s: float = 300.0) -> DataFrame:
+    """Run a streaming frame over the input available now into the
+    in-memory table ``name`` (output mode ``mode``) and return that
+    table. A query that fails or is still running after ``timeout_s`` is
+    stopped and raises: its sink holds a partial result, and reading it
+    as complete would be a silently wrong answer."""
+    q = (df.writeStream.format("memory").queryName(name)
+         .outputMode(mode).trigger(availableNow=True).start())
+    try:
+        done = q.awaitTermination(timeout_s)
+        err = q.exception()
+    finally:
+        if q.isActive:
+            q.stop()
+    if err is not None:
+        raise RuntimeError(f"streaming query {name!r} failed: {err}")
+    if not done:
+        raise TimeoutError(
+            f"streaming query {name!r} still running after {timeout_s}s; "
+            "its sink holds a partial result")
+    return df.sparkSession.table(name)

@@ -28,6 +28,7 @@ from agensgraph_spark.pipeline import retrieval as RT
 from agensgraph_spark.pipeline import sampling as SMP
 from agensgraph_spark.pipeline import similarity as S
 from agensgraph_spark.pipeline import text as TX
+from agensgraph_spark.streaming import drain_to_memory
 
 _ENGINES: dict[tuple, CypherEngine] = {}
 
@@ -2726,10 +2727,7 @@ def _q_stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts", normalize_event_ts(raw_schema["ts"].dataType).cast("timestamp"))
     from agensgraph_spark.streaming import windowed_event_counts
     agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    q = (agg.writeStream.format("memory").queryName("stream_hourly_sink")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    return spark.table("stream_hourly_sink").select(
+    return drain_to_memory(agg, "stream_hourly_sink", "complete").select(
         F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("ws"),
         "event_type", "n",
         F.round("total_value", 6).alias("total_value"))
@@ -2752,10 +2750,7 @@ def _q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ded = stream_dedup(stream, ["user_id", "event_type", "hour"], watermark="2 hours")
     out = ded.select("user_id", "event_type",
                      F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hr"))
-    q = (out.writeStream.format("memory").queryName("stream_dedup_sink")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    return spark.table("stream_dedup_sink")
+    return drain_to_memory(out, "stream_dedup_sink", "append")
 
 
 def _q_pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3068,10 +3063,7 @@ def _q_stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = scored.groupBy("source", "keep").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tokens").alias("n_tokens"))
-    q = (agg.writeStream.format("memory").queryName("stream_quality_sink")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    return spark.table("stream_quality_sink")
+    return drain_to_memory(agg, "stream_quality_sink", "complete")
 
 
 def _q_stream_repetition_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3085,10 +3077,7 @@ def _q_stream_repetition_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = TX.repetition_stats(stream, carry=("source",))
     agg = scored.groupBy("source", "keep").agg(
         F.count(F.lit(1)).alias("n_docs"))
-    q = (agg.writeStream.format("memory").queryName("stream_repetition_sink")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    return spark.table("stream_repetition_sink")
+    return drain_to_memory(agg, "stream_repetition_sink", "complete")
 
 
 _STREAM_REPETITION_ORACLE = r"""
@@ -3175,10 +3164,7 @@ def _q_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.coalesce("tier", F.lit("none")).alias("tier"), "event_type")
     agg = enriched.groupBy("tier", "event_type").agg(
         F.count(F.lit(1)).alias("n"))
-    q = (agg.writeStream.format("memory").queryName("stream_enrich_sink")
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    return spark.table("stream_enrich_sink")
+    return drain_to_memory(agg, "stream_enrich_sink", "complete")
 
 
 _STREAM_ENRICH_ORACLE = """
@@ -3219,11 +3205,7 @@ def _q_stream_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = interval_join(
         clicks, views, F.col("c_user") == F.col("v_user"),
         "c_ts", "v_ts", lookback_seconds=43200)
-    q = (joined.writeStream.format("memory")
-         .queryName("stream_ijoin_sink")
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    return spark.table("stream_ijoin_sink").select(
+    return drain_to_memory(joined, "stream_ijoin_sink", "append").select(
         F.col("click_id").cast("long").alias("click_id"),
         F.col("view_id").cast("long").alias("view_id"),
         F.col("c_user").cast("long").alias("user_id"),
@@ -3262,10 +3244,7 @@ def _q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = stream.withColumn(
         "ts", normalize_event_ts(raw_schema["ts"].dataType).cast("timestamp"))
     sess = sessionize(stream, gap_seconds=1800)
-    q = (sess.writeStream.format("memory").queryName("stream_sess_sink")
-         .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(300)
-    return spark.table("stream_sess_sink").select(
+    return drain_to_memory(sess, "stream_sess_sink", "update").select(
         F.col("user_id").cast("long").alias("user_id"),
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("ss"),
         F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("se"),

@@ -1,4 +1,5 @@
 import os
+import warnings
 
 import pytest
 
@@ -58,13 +59,6 @@ SLOW_TESTS = frozenset([
     'test_differential_dedup.py::test_minhash_lsh_pipeline_matches_python[xxh64]',
     'test_differential_dedup.py::test_minhash_md5_and_xxh64_verified_pairs_agree',
     'test_expr_fuzz.py::test_expr_fuzz_differential',
-    'test_iteration_state.py::test_bfs_bounded_cached_frames',
-    'test_iteration_state.py::test_dijkstra_bounded_cached_frames',
-    'test_iteration_state.py::test_dijkstra_cached_frames_independent_of_depth',
-    'test_iteration_state.py::test_dijkstra_max_iters_warns',
-    'test_iteration_state.py::test_reliable_checkpoint_mode_matches_local',
-    'test_iteration_state.py::test_vle_clamp_warns',
-    'test_iteration_state.py::test_vle_result_survives_edge_unpersist',
     'test_multimodal.py::test_image_stats_deterministic',
     'test_pipeline_scale.py::test_assign_sessions_bucketed_mode_identical',
     'test_pipeline_scale.py::test_assign_sessions_bucketed_multi_null_ts',
@@ -75,18 +69,12 @@ SLOW_TESTS = frozenset([
     'test_pipeline_scale.py::test_fuzzy_decontaminate_hand_computed',
     'test_pipeline_scale.py::test_fuzzy_decontaminate_id_space_guard',
     'test_pipeline_scale.py::test_harmonic_centrality_sampled_hand_computed',
-    'test_pipeline_scale.py::test_hits_and_harmonic_deep_iters_bounded_plan',
-    'test_pipeline_scale.py::test_k_core_differential',
-    'test_pipeline_scale.py::test_k_truss_incremental_matches_full',
     'test_pipeline_scale.py::test_neighbor_mean_embeddings_hand_computed',
-    'test_pipeline_scale.py::test_neighbor_mean_two_rounds',
     'test_pipeline_scale.py::test_new_operators_empty_inputs',
-    'test_pipeline_scale.py::test_pagerank_deep_iters_bounded_plan',
     'test_pipeline_scale.py::test_personalized_pagerank_hand_computed',
     'test_pipeline_scale.py::test_personalized_pagerank_out_of_graph_seeds',
     'test_pipeline_scale.py::test_random_walks_match_python_replay',
     'test_pipeline_scale.py::test_scc_adversarial_condensation_chain',
-    'test_pipeline_scale.py::test_scc_differential_vs_tarjan',
     'test_pipeline_scale.py::test_scc_hand_graph',
     'test_pipeline_scale.py::test_semantic_dedup_cap_bounds_hot_cluster',
     'test_plans.py::test_bucketed_join_no_exchange',
@@ -147,8 +135,13 @@ SMOKE_TAIL = frozenset([
 _TAIL_RE = "test_oracle_parity_tail.py::test_tail_query_matches_oracle"
 
 
+def _lane_id(item) -> str:
+    # only the directory prefix: parametrized ids may contain "/"
+    return item.nodeid.removeprefix("tests/")
+
+
 def _is_slow(item) -> bool:
-    nodeid = item.nodeid.split("/")[-1]  # strip tests/ prefix
+    nodeid = _lane_id(item)
     if nodeid in SLOW_TESTS or "slow" in item.keywords:
         return True
     if nodeid.startswith(_TAIL_RE + "["):
@@ -158,6 +151,16 @@ def _is_slow(item) -> bool:
 
 
 def pytest_collection_modifyitems(config, items):
+    # a renamed or deleted test leaves its SLOW_TESTS entry matching
+    # nothing; say so for every whole collected file instead of letting
+    # the entry rot silently
+    if not config.option.keyword and not any("::" in a for a in config.args):
+        ids = {_lane_id(item) for item in items}
+        files = {i.split("::")[0] for i in ids}
+        for entry in sorted(SLOW_TESTS):
+            if entry.split("::")[0] in files and entry not in ids:
+                warnings.warn(
+                    f"SLOW_TESTS entry matches no collected test: {entry}")
     if config.getoption("--slow") or os.environ.get("SPARK_GRAFT_SLOW_TESTS"):
         return
     skip = pytest.mark.skip(

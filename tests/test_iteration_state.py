@@ -1,4 +1,4 @@
-"""Iteration-state hygiene for the path operators and cap visibility.
+"""Iteration-state hygiene for the iterative operators and cap visibility.
 
 The loops in operators/paths.py are generational: each round retires
 the superseded cached generation (GraphX-Pregel style), so a deep
@@ -9,6 +9,7 @@ no silent caps."""
 import logging
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from agensgraph_spark.operators import paths as P
@@ -149,37 +150,153 @@ def test_lsh_default_cap_keeps_buckets(spark):
     assert D.minhash_lsh_candidates(docs).count() == 6  # all 4C2 pairs
 
 
-def test_reliable_checkpoint_mode_matches_local(spark, tmp_path):
-    """With spark.agensgraph.checkpointDir set, the iterative path
-    operators truncate lineage via reliable DataFrame.checkpoint —
-    results identical to the default localCheckpoint mode, and the
-    checkpoint files actually land in the configured directory (the
-    executor-loss survival story depends on them existing)."""
+# Every family that materializes through operators/iterate.py, on tiny
+# inputs. Each case returns its result frame; the deep cases run past
+# iterate.TRUNCATE_EVERY rounds so the every-6 cadence fires.
+def _graph(spark):
+    # two triangles sharing vertex 2 (one directed cycle each), a
+    # 4-clique with a two-edge tail, and vertex 11 isolated
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2), (5, 6), (5, 7),
+         (5, 8), (6, 7), (6, 8), (7, 8), (8, 9), (9, 10)], "src long, dst long")
+    verts = spark.range(12)
+    return edges, verts, spark.createDataFrame([(0,), (5,)], "id long")
+
+
+def _path_cases():
+    def vle(spark):
+        return P.vle_expand(chain_edges(spark, 8),
+                            spark.createDataFrame([(0,)], "seed long"), 1, 7
+                            ).select("seed", "dst", "len")
+
+    def bfs(spark):
+        return P.bfs_shortest(
+            chain_edges(spark, 8),
+            spark.createDataFrame([(0, 6)], "seed long, target long"), 1, 7
+        ).select("seed", "target", "len")
+
+    def dijkstra(spark):
+        return P.dijkstra_paths(
+            chain_edges(spark, 8),
+            spark.createDataFrame([(0, 6)], "seed long, target long"),
+            max_iters=10).select("seed", "target", "len", "weight")
+
+    return {"vle_expand": vle, "bfs_shortest": bfs, "dijkstra_paths": dijkstra}
+
+
+def _analytics_cases():
+    from agensgraph_spark.operators import analytics as AN
+
+    def on_graph(fn):
+        return lambda spark: fn(*_graph(spark))
+
+    return {
+        "pagerank": on_graph(lambda e, v, s: AN.pagerank(e, v, iters=7)),
+        "label_propagation": on_graph(
+            lambda e, v, s: AN.label_propagation(e, v, iters=7)),
+        "personalized_pagerank": on_graph(
+            lambda e, v, s: AN.personalized_pagerank(e, v, s, iters=7)),
+        "random_walks": on_graph(
+            lambda e, v, s: AN.random_walks(e, s, steps=7)),
+        "hits": on_graph(lambda e, v, s: AN.hits(e, v, iters=3)),
+        "k_core": on_graph(lambda e, v, s: AN.k_core(e, k=2)),
+        "k_truss_full": on_graph(
+            lambda e, v, s: AN.k_truss(e, k=3, incremental_threshold=0.0)),
+        "k_truss_incremental": on_graph(
+            lambda e, v, s: AN.k_truss(e, k=3, incremental_threshold=1.1)),
+        "harmonic_centrality": on_graph(
+            lambda e, v, s: AN.harmonic_centrality(e, v, max_hops=3)),
+        "betweenness_sampled": on_graph(
+            lambda e, v, s: AN.betweenness_centrality_sampled(e, v, s, 3)),
+        "scc_distributed": on_graph(
+            lambda e, v, s: AN.strongly_connected_components(
+                e, v, driver_max_edges=0)),
+        "cc_distributed": on_graph(
+            lambda e, v, s: D.connected_components(
+                e.toDF("id_a", "id_b"), driver_max_edges=0)),
+    }
+
+
+def _pipeline_cases():
+    from agensgraph_spark.pipeline.similarity import neighbor_mean_embeddings
+
+    def minhash(spark):
+        base = "the quick brown fox jumps over the lazy dog near the river bank"
+        docs = spark.createDataFrame(
+            [(1, base), (2, base + " today"), (3, base.replace("lazy", "sleepy")),
+             (4, "an entirely different sentence about graph databases"),
+             (5, "an entirely different sentence about graph database")],
+            "doc_id long, text string")
+        return D.minhash_neardup_pairs(docs, threshold=0.3)
+
+    def neighbor_mean(spark):
+        emb = spark.createDataFrame(
+            [(1, [1.0, 0.0]), (2, [3.0, 6.0]), (3, [0.0, 2.0])],
+            ["vec_id", "embedding"])
+        pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
+        return neighbor_mean_embeddings(pairs, emb, rounds=2)
+
+    def cypher_write(spark):
+        from agensgraph_spark.catalog import GraphCatalog
+        from agensgraph_spark.cypher.compiler import CypherEngine
+        from agensgraph_spark.graph import Graph
+        e = CypherEngine(spark, Graph(GraphCatalog("ck")))
+        e.cypher("CREATE (:ckp {k: 1}), (:ckp {k: 2}), (:ckp {k: 3})")
+        e.cypher("MATCH (a:ckp {k: 1}), (b:ckp {k: 2}) CREATE (a)-[:ckr]->(b)")
+        e.cypher("MATCH (a:ckp {k: 2}) DETACH DELETE a")
+        return e.cypher("MATCH (n:ckp) OPTIONAL MATCH (n)-[r:ckr]->() "
+                        "RETURN n.k AS k, count(r) AS out")
+
+    return {"minhash_neardup_pairs": minhash,
+            "neighbor_mean_embeddings": neighbor_mean,
+            "cypher_create_detach_delete": cypher_write}
+
+
+_CKPT_CASES = {**_path_cases(), **_analytics_cases(), **_pipeline_cases()}
+
+
+def _rows(df):
+    def norm(v):
+        if isinstance(v, float):
+            return round(v, 9)
+        if isinstance(v, list):
+            return tuple(norm(x) for x in v)
+        return v
+    return sorted(tuple(norm(v) for v in r) for r in df.collect())
+
+
+@pytest.fixture(scope="module")
+def reliable_ckdir(tmp_path_factory):
+    # one directory for the module: the SparkContext adopts the conf's
+    # directory on first use and keeps it
+    return tmp_path_factory.mktemp("reliable_ck")
+
+
+@pytest.mark.parametrize("case", sorted(_CKPT_CASES))
+def test_reliable_checkpoint_mode_matches_local(spark, reliable_ckdir, case):
+    """With spark.agensgraph.checkpointDir set, every family that
+    materializes through operators/iterate.py truncates lineage with
+    reliable DataFrame.checkpoint: the rows equal the default
+    localCheckpoint mode, and checkpoint files land in the configured
+    directory (the executor-loss story depends on them existing)."""
     import os
-    edges = chain_edges(spark, 8)
-    seeds = spark.createDataFrame([(0,)], "seed long")
-    pairs = spark.createDataFrame([(0, 6)], "seed long, target long")
 
-    def run_all():
-        vle = sorted(tuple(r) for r in P.vle_expand(
-            edges, seeds, 1, 7, checkpoint_every=2).select(
-                "seed", "dst", "len").collect())
-        bfs = sorted(tuple(r) for r in P.bfs_shortest(
-            edges, pairs, 1, 7).select("seed", "target", "len").collect())
-        dij = sorted(tuple(r) for r in P.dijkstra_paths(
-            edges, pairs, max_iters=10).select(
-                "seed", "target", "len", "weight").collect())
-        return vle, bfs, dij
+    def listing():
+        return {os.path.join(dp, f) for dp, ds, fs in os.walk(reliable_ckdir)
+                for f in ds + fs}
 
-    base = run_all()
-    ckdir = str(tmp_path / "reliable_ck")
-    spark.conf.set("spark.agensgraph.checkpointDir", ckdir)
+    run = _CKPT_CASES[case]
+    base = _rows(run(spark))
+    before = listing()
+    spark.conf.set("spark.agensgraph.checkpointDir", str(reliable_ckdir))
     try:
-        reliable = run_all()
+        out = run(spark)
+        # listed while the result frame holds its checkpoints, before
+        # the ContextCleaner may retire them
+        written = listing() - before
+        reliable = _rows(out)
     finally:
         spark.conf.unset("spark.agensgraph.checkpointDir")
+    assert base, f"{case}: empty result proves nothing"
     assert reliable == base
-    assert base[1] == [(0, 6, 6)]
-    # reliable checkpoint files were written under the configured dir
-    files = [os.path.join(dp, f) for dp, _, fs in os.walk(ckdir) for f in fs]
-    assert files, f"no checkpoint files under {ckdir}"
+    assert written, f"{case}: no checkpoint files under {reliable_ckdir}"

@@ -3,10 +3,12 @@ windowed aggregation, graph snapshot append via foreachBatch."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from agensgraph_spark.loader import read_table
 from agensgraph_spark.streaming import (
+    drain_to_memory,
     stream_append_label,
     stream_file_source,
     windowed_event_counts,
@@ -155,3 +157,29 @@ def test_interval_join_rejects_negative_lookback(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError):
         interval_join(df, df, F.lit(True), "ts", "ts", lookback_seconds=-1)
+
+
+
+def test_drain_to_memory_timeout_raises(spark, tmp_path):
+    """A query still running at the deadline is stopped and raises:
+    its memory sink holds a partial result. The one row sleeps past the
+    deadline, so the timeout always fires."""
+    import time
+    src = str(tmp_path / "landing")
+    spark.range(1).write.parquet(src)
+    stream = stream_file_source(spark, src, spark.read.parquet(src).schema)
+    nap = F.udf(lambda v: time.sleep(5) or v, "long")
+    with pytest.raises(TimeoutError, match="never_drains"):
+        drain_to_memory(stream.select(nap("id").alias("id")),
+                        "never_drains", "append", timeout_s=1)
+    assert not any(q.name == "never_drains" for q in spark.streams.active)
+
+
+def test_drain_to_memory_failed_query_raises(spark, tmp_path):
+    src = str(tmp_path / "landing")
+    spark.range(3).write.parquet(src)
+    stream = stream_file_source(spark, src, spark.read.parquet(src).schema)
+    bad = stream.select(F.raise_error(F.lit("boom")).alias("x"))
+    with pytest.raises(Exception, match="boom"):
+        drain_to_memory(bad, "fails_midway", "append")
+    assert not any(q.name == "fails_midway" for q in spark.streams.active)
